@@ -20,8 +20,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the RAI pipeline —
     derived points → kNN nearest road (cell-pruned, exact) → two-stage
     PIP country assignment → per-country aggregate (SURVEY.md M1)."""
-    from sdg_engine.queries import flagship_rai
+    from sdg_engine.queries import QUERIES
 
+    flagship_rai = QUERIES["flagship_rai"]  # the registry entry preps the session
     return flagship_rai(spark, "/root/testdata/sf0.001")
 
 

@@ -24,10 +24,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from sdg_engine.session import ENGINE_CONFS
+    from sdg_engine.session import engine_confs
 
-    b = SparkSession.builder.appName("bench_subset").master(f"local[{cpus}]")
-    for k, v in {**ENGINE_CONFS, **overrides}.items():
+    master = f"local[{cpus}]"
+    b = SparkSession.builder.appName("bench_subset").master(master)
+    for k, v in {**engine_confs(master), **overrides}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -27,10 +27,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from sdg_engine.session import ENGINE_CONFS
+    from sdg_engine.session import engine_confs
 
-    b = SparkSession.builder.appName(f"profile_{name}").master(f"local[{cpus}]")
-    for k, v in ENGINE_CONFS.items():
+    master = f"local[{cpus}]"
+    b = SparkSession.builder.appName(f"profile_{name}").master(master)
+    for k, v in engine_confs(master).items():
         b = b.config(k, v)
     b = (
         b.config("spark.eventLog.enabled", "true")

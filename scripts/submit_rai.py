@@ -24,9 +24,9 @@ from pyspark.sql import SparkSession
 
 def main(sf_dir: str, out_dir: str) -> None:
     spark = SparkSession.builder.appName("sdg_rai_submit").getOrCreate()
-    from sdg_engine.queries import flagship_rai  # from --py-files zip
+    from sdg_engine.queries import QUERIES  # from --py-files zip
 
-    flagship_rai(spark, sf_dir).write.mode("overwrite").parquet(out_dir)
+    QUERIES["flagship_rai"](spark, sf_dir).write.mode("overwrite").parquet(out_dir)
     spark.stop()
 
 

@@ -35,43 +35,17 @@ covers every harness table column.
 from __future__ import annotations
 
 import hashlib
-import io
 import json
 import struct
 import zlib
 
+from .wire import read_varint, unzigzag, write_varint, zigzag
+
 MAGIC = b"Obj\x01"
 
 
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63) if n < 0 else n << 1
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def write_long(buf: bytearray, n: int) -> None:
-    u = _zigzag(n) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            buf.append(b | 0x80)
-        else:
-            buf.append(b)
-            return
-
-
-def read_long(f) -> int:
-    u = 0
-    shift = 0
-    while True:
-        b = f.read(1)[0]
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(u)
-        shift += 7
+    write_varint(buf, zigzag(n))
 
 
 def _write_value(buf: bytearray, typ, v) -> None:
@@ -97,23 +71,6 @@ def _write_value(buf: bytearray, typ, v) -> None:
         buf.extend(v)
     else:
         raise NotImplementedError(f"avro type {typ!r}")
-
-
-def _read_value(f, typ):
-    if isinstance(typ, list):
-        branch = typ[read_long(f)]
-        return None if branch == "null" else _read_value(f, branch)
-    if typ in ("long", "int"):
-        return read_long(f)
-    if typ == "double":
-        return struct.unpack("<d", f.read(8))[0]
-    if typ == "boolean":
-        return f.read(1)[0] == 1
-    if typ == "string":
-        return f.read(read_long(f)).decode("utf-8")
-    if typ == "bytes":
-        return bytes(f.read(read_long(f)))
-    raise NotImplementedError(f"avro type {typ!r}")
 
 
 def _field_type(field: dict):
@@ -172,22 +129,12 @@ def write_avro(path: str, schema: dict, records, codec: str = "null",
 
 
 def _read_long_at(buf: bytes, pos: int) -> tuple[int, int]:
-    """Buffer-cursor twin of read_long (r06: the BytesIO path paid a
-    method call PER BYTE of every varint — ~2M calls per 100k-record
-    file; indexing a bytes object is ~10x cheaper)."""
-    u = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1), pos
-        shift += 7
+    u, pos = read_varint(buf, pos)
+    return unzigzag(u), pos
 
 
 def _read_value_at(buf: bytes, pos: int, typ):
-    """Buffer-cursor twin of _read_value — same spec dispatch."""
+    """Decode one value of ``typ`` at ``buf[pos]`` -> (value, next pos)."""
     if isinstance(typ, list):
         branch, pos = _read_long_at(buf, pos)
         b = typ[branch]

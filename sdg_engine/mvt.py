@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import WORLD_MIN, WORLD_SIZE
+from .wire import read_varint, unzigzag, varint, zigzag
 
 EXTENT = 4096
 
@@ -34,37 +35,16 @@ EXTENT = 4096
 # --- protobuf primitives ----------------------------------------------------
 
 
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    v &= (1 << 64) - 1
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v >= 0 else ((-v) << 1) - 1
-
-
-def _unzigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _field(num: int, wire: int) -> bytes:
-    return _varint((num << 3) | wire)
+    return varint((num << 3) | wire)
 
 
 def _len_field(num: int, payload: bytes) -> bytes:
-    return _field(num, 2) + _varint(len(payload)) + payload
+    return _field(num, 2) + varint(len(payload)) + payload
 
 
 def _packed(num: int, ints: list[int]) -> bytes:
-    body = b"".join(_varint(i) for i in ints)
+    body = b"".join(varint(i) for i in ints)
     return _len_field(num, body)
 
 
@@ -92,7 +72,7 @@ def encode_geometry(lines, geom_type: int = GEOM_LINESTRING) -> list[int]:
             continue
         px, py = int(pts[0][0]), int(pts[0][1])
         cmds.append((1 << 3) | 1)  # MoveTo ×1
-        cmds += [_zigzag(px - cx), _zigzag(py - cy)]
+        cmds += [zigzag(px - cx), zigzag(py - cy)]
         cx, cy = px, py
         if geom_type != GEOM_POINT and n > 1:
             body = pts[1:]
@@ -101,7 +81,7 @@ def encode_geometry(lines, geom_type: int = GEOM_LINESTRING) -> list[int]:
             cmds.append((len(body) << 3) | 2)  # LineTo ×k
             for x, y in body:
                 x, y = int(x), int(y)
-                cmds += [_zigzag(x - cx), _zigzag(y - cy)]
+                cmds += [zigzag(x - cx), zigzag(y - cy)]
                 cx, cy = x, y
             if geom_type == GEOM_POLYGON:
                 cmds.append((1 << 3) | 7)  # ClosePath
@@ -110,9 +90,9 @@ def encode_geometry(lines, geom_type: int = GEOM_LINESTRING) -> list[int]:
 
 def encode_value(v) -> bytes:
     if isinstance(v, bool):
-        return _field(7, 0) + _varint(1 if v else 0)
+        return _field(7, 0) + varint(1 if v else 0)
     if isinstance(v, (int, np.integer)):
-        return _field(4, 0) + _varint(int(v) & ((1 << 64) - 1))
+        return _field(4, 0) + varint(int(v))
     if isinstance(v, float):
         import struct
 
@@ -139,10 +119,10 @@ def encode_layer(name: str, features: list[dict], extent: int = EXTENT) -> bytes
                 vidx[vk] = len(values)
                 values.append(v)
             tag_ints += [kidx[k], vidx[vk]]
-        fbody = _field(1, 0) + _varint(int(ft.get("id", 0)))
+        fbody = _field(1, 0) + varint(int(ft.get("id", 0)))
         if tag_ints:
             fbody += _packed(2, tag_ints)
-        fbody += _field(3, 0) + _varint(int(ft.get("type", GEOM_LINESTRING)))
+        fbody += _field(3, 0) + varint(int(ft.get("type", GEOM_LINESTRING)))
         fbody += _packed(4, encode_geometry(ft["lines"], ft.get("type", GEOM_LINESTRING)))
         body += _len_field(2, fbody)
     out = bytearray()
@@ -152,8 +132,8 @@ def encode_layer(name: str, features: list[dict], extent: int = EXTENT) -> bytes
         out += _len_field(3, k.encode("utf-8"))
     for v in values:
         out += _len_field(4, encode_value(v))
-    out += _field(5, 0) + _varint(extent)
-    out += _field(15, 0) + _varint(2)  # version 2
+    out += _field(5, 0) + varint(extent)
+    out += _field(15, 0) + varint(2)  # version 2
     return bytes(out)
 
 
@@ -164,26 +144,15 @@ def encode_tile(layers: dict[str, list[dict]], extent: int = EXTENT) -> bytes:
 # --- minimal decoder (tests/round-trip only) --------------------------------
 
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    while True:
-        b = buf[pos]
-        v |= (b & 0x7F) << shift
-        pos += 1
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-
-
 def _fields(buf: bytes):
     pos = 0
     while pos < len(buf):
-        key, pos = _read_varint(buf, pos)
+        key, pos = read_varint(buf, pos)
         num, wire = key >> 3, key & 7
         if wire == 0:
-            v, pos = _read_varint(buf, pos)
+            v, pos = read_varint(buf, pos)
         elif wire == 2:
-            ln, pos = _read_varint(buf, pos)
+            ln, pos = read_varint(buf, pos)
             v = buf[pos:pos + ln]
             pos += ln
         elif wire == 1:
@@ -238,7 +207,7 @@ def decode_tile(buf: bytes) -> dict:
                     ints = []
                     pos = 0
                     while pos < len(v):
-                        i, pos = _read_varint(v, pos)
+                        i, pos = read_varint(v, pos)
                         ints.append(i)
                     for ki, vi in zip(ints[::2], ints[1::2]):
                         ft["tags"][layer["keys"][ki]] = layer["values"][vi]
@@ -246,7 +215,7 @@ def decode_tile(buf: bytes) -> dict:
                     ints = []
                     pos = 0
                     while pos < len(v):
-                        i, pos = _read_varint(v, pos)
+                        i, pos = read_varint(v, pos)
                         ints.append(i)
                     cx = cy = 0
                     i = 0
@@ -260,12 +229,12 @@ def decode_tile(buf: bytes) -> dict:
                                 ft["lines"].append(np.array(cur))
                                 cur = []
                             for _ in range(cnt):
-                                cx += _unzigzag(ints[i]); cy += _unzigzag(ints[i + 1])
+                                cx += unzigzag(ints[i]); cy += unzigzag(ints[i + 1])
                                 i += 2
                                 cur.append([cx, cy])
                         elif cid == 2:  # LineTo
                             for _ in range(cnt):
-                                cx += _unzigzag(ints[i]); cy += _unzigzag(ints[i + 1])
+                                cx += unzigzag(ints[i]); cy += unzigzag(ints[i + 1])
                                 i += 2
                                 cur.append([cx, cy])
                         elif cid == 7:  # ClosePath

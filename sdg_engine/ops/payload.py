@@ -463,46 +463,24 @@ def sobel_mag(lum_i: np.ndarray) -> np.ndarray:
     return np.abs(gx) + np.abs(gy)
 
 
+def sobel_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
+    mag = sobel_mag(lum)
+    return (int(mag.size), int((mag > SOBEL_EDGE_T).sum()),
+            int(mag.sum()), int(mag.max()))
+
+
 def sobel_stats(images: DataFrame) -> DataFrame:
     """Per-image Sobel edge stats: decode -> integer BT.601 luma ->
     3x3 Sobel L1 magnitude -> (n_px, n_edges, sum_mag, max_mag).
 
-    Map-only mapInPandas like hillshade_stats — payload bytes never
-    shuffle, the 3x3 halo is interior to each image (edge-replicate),
-    and every value is an exact BIGINT, so the checksums are
-    fold-order independent at any partitioning.
+    Map-only (see _int_terrain_op): the 3x3 halo is interior to each
+    image (edge-replicate), and every value is an exact BIGINT, so the
+    checksums are fold-order independent at any partitioning.
     """
-
-    def _edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                mag = sobel_mag(lum)
-                out.append(
-                    (
-                        rr.image_id,
-                        int(mag.size),
-                        int((mag > SOBEL_EDGE_T).sum()),
-                        int(mag.sum()),
-                        int(mag.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "n_edges", "sum_mag", "max_mag"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _edges,
-        "image_id string, n_px int, n_edges int, sum_mag bigint, max_mag bigint",
+    return _int_terrain_op(
+        images, sobel_stats_kernel,
+        ["n_px", "n_edges", "sum_mag", "max_mag"],
+        "n_px int, n_edges int, sum_mag bigint, max_mag bigint",
     )
 
 
@@ -562,49 +540,23 @@ def d8_flow_accum(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
     return np.asarray(al, dtype=np.int64), int((flat_t < 0).sum())
 
 
+def d8_flow_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
+    acc, n_sinks = d8_flow_accum(lum)
+    wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
+    return (int(acc.size), n_sinks, int(acc.sum()), int(acc.max()),
+            int((acc * wgt).sum()))
+
+
 def d8_flow_stats(images: DataFrame) -> DataFrame:
     """Per-image D8 flow-accumulation stats: decode -> integer luma
     DEM -> steepest-descent accumulation -> exact-BIGINT summaries.
 
-    Map-only mapInPandas like hillshade/sobel — payload bytes never
-    shuffle; the per-image DAG sweep is local (a DEM tile's flow field
-    is interior under clamp borders), and every output is an exact
-    integer, fold-order independent at any partitioning."""
-
-    def _flow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                acc, n_sinks = d8_flow_accum(lum)
-                wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
-                out.append(
-                    (
-                        rr.image_id,
-                        int(acc.size),
-                        n_sinks,
-                        int(acc.sum()),
-                        int(acc.max()),
-                        int((acc * wgt).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "n_sinks",
-                         "sum_acc", "max_acc", "chk"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _flow,
-        "image_id string, n_px int, n_sinks int, "
-        "sum_acc bigint, max_acc bigint, chk bigint",
+    Map-only (see _int_terrain_op); the per-image DAG sweep is local
+    (a DEM tile's flow field is interior under clamp borders)."""
+    return _int_terrain_op(
+        images, d8_flow_stats_kernel,
+        ["n_px", "n_sinks", "sum_acc", "max_acc", "chk"],
+        "n_px int, n_sinks int, sum_acc bigint, max_acc bigint, chk bigint",
     )
 
 

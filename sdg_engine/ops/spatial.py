@@ -23,7 +23,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -646,43 +646,6 @@ def snap_nearest_road(
     )
 
 
-def near_road_semi(
-    points_geo: DataFrame,
-    segs: DataFrame,
-    cutoff_m: float,
-    level: int | None = None,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Shuffle-free 'within cutoff of any road' filter (J1+J4 existence
-    form).
-
-    LEFT SEMI broadcast hash join on the point's cell against the
-    kring(1)-expanded segment cover, with the exact point→segment
-    distance as an extra join predicate.  No shuffle touches the fact
-    table — this is the flagship's scale path (a per-point argmin is
-    only needed when the nearest road itself is asked for; see
-    knn_nearest_road)."""
-    from ..sqlgen import point_seg_dist_expr
-
-    if level is None:
-        level = level_for_cutoff(cutoff_m)
-    probe = with_point_cell(points_geo, level, "lon", "lat", "cell_id")
-    build = segments_with_cells(segs, level, k_expand=0)
-    build = with_kring(
-        build, level, 1, "cell_id", "ring_cell_id",
-        idx_cols=("cell_id_ix", "cell_id_iy"),
-    )
-    build = (
-        build.select(F.col("ring_cell_id").alias("rcell"), "ax", "ay", "bx", "by")
-        .dropDuplicates(["rcell", "ax", "ay", "bx", "by"])
-    )
-    dist = point_seg_dist_expr("lon", "lat", "ax", "ay", "bx", "by")
-    cond = (probe.cell_id == build.rcell) & (
-        F.expr(dist) <= F.lit(float(cutoff_m))
-    )
-    return probe.join(F.broadcast(build), cond, "left_semi").drop("cell_id")
-
-
 def pip_country_udf(rings: dict[str, np.ndarray]):
     """Arrow-batched exact ray-cast PIP: (lon, lat) -> country or NULL.
 
@@ -1143,7 +1106,7 @@ def _ring_cell_test(cids: np.ndarray, level: int, ring: np.ndarray):
     # where()-masked temporaries (~20 × ncell·nedge doubles at the
     # strip-refinement level: 800k cells × 10 edges) disappear.  Same
     # elementwise IEEE arithmetic ⇒ bit-identical classification
-    # (pinned by tests/test_spatial.py's brute-force twins).  Measured
+    # (pinned by tests/test_ring_cell.py's scalar brute-force twin).  Measured
     # 4.5 s → 0.5 s for the level-9→12 strip prestage on the r06 host.
     n = len(cids)
     crosses = np.zeros(n, dtype=bool)

@@ -26,12 +26,7 @@ from .harness import (
     segments_df,
 )
 from .ops import spatial as SP
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
+from .qcommon import _t, _spread
 
 
 def _utc(spark: SparkSession) -> None:
@@ -79,7 +74,6 @@ def _prep(spark: SparkSession) -> None:
 
 
 def flagship_rai(spark, sf_dir):
-    _prep(spark)
     """End-to-end RAI: points → kNN road ≤60 km → PIP country → agg.
 
     The graft of the reference's PopulationNearRoadsJob (SURVEY.md
@@ -113,7 +107,6 @@ def flagship_rai(spark, sf_dir):
 
 
 def spatial_cell_cover(spark, sf_dir):
-    _prep(spark)
     """C1: quadtree cell id per point at level 12, count per cell."""
     pts = SP.with_point_cell(points_df(spark, sf_dir), 12)
     return pts.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_points"))
@@ -136,7 +129,6 @@ AOI_RING.append(AOI_RING[0])  # closed
 
 
 def spatial_region_query(spark, sf_dir):
-    _prep(spark)
     """J2b (r04): ad-hoc REGION query — which points fall inside a
     user-supplied polygon (the reusable form of the country machinery:
     ``assign_countries`` with a one-ring dict runs the same compacted
@@ -153,7 +145,6 @@ def spatial_region_query(spark, sf_dir):
 
 
 def spatial_pyramid(spark, sf_dir):
-    _prep(spark)
     """C1b (r04): tile PYRAMID build — the GeoTrellis Pyramid.up
     analogue: per-cell point counts rolled up levels 12→9 by packed-id
     parent truncation ((level−s)<<54 | code>>2s).  ONE pass: a 4-row
@@ -179,7 +170,6 @@ def spatial_pyramid(spark, sf_dir):
 
 
 def spatial_knn_nearest(spark, sf_dir):
-    _prep(spark)
     """J4 ★: nearest road per point (exact; verified vs brute-force SQL)."""
     near = SP.knn_nearest_road(
         points_df(spark, sf_dir), segments_df(spark, sf_dir), KNN_CUTOFF_M,
@@ -191,7 +181,6 @@ def spatial_knn_nearest(spark, sf_dir):
 
 
 def spatial_knn_topk(spark, sf_dir):
-    _prep(spark)
     """J4b (r05): 3 nearest roads per point within the cutoff — exact
     top-k via candidate equi-join + per-road min + rank window; the
     DuckDB oracle is brute-force cross-join ranked top-3 (VERDICT r04
@@ -206,7 +195,6 @@ def spatial_knn_topk(spark, sf_dir):
 
 
 def spatial_pip_country(spark, sf_dir):
-    _prep(spark)
     """J2 ★: compacted-cell candidates + exact ray-cast assignment."""
     cc = SP.assign_countries(
         points_df(spark, sf_dir), harness_rings(), level=9, id_col="point_id"
@@ -215,7 +203,6 @@ def spatial_pip_country(spark, sf_dir):
 
 
 def spatial_join_cells(spark, sf_dir):
-    _prep(spark)
     """J1 ★: points × road-segment cover equi-join at level 5."""
     pts = SP.with_point_cell(points_df(spark, sf_dir), 5)
     segs = SP.segments_with_cells(segments_df(spark, sf_dir), 5)
@@ -226,7 +213,6 @@ def spatial_join_cells(spark, sf_dir):
 
 
 def spatial_kring_cells(spark, sf_dir):
-    _prep(spark)
     """C3: k-ring neighborhood per point at level 10 (world-clipped)."""
     pts = SP.with_point_cell(points_df(spark, sf_dir), 10, keep_idx=True)
     ring = SP.with_kring(pts, 10, 1, idx_cols=("cell_id_ix", "cell_id_iy"))
@@ -241,7 +227,6 @@ def spatial_compact_cover(spark, sf_dir):
     level 7 — ancestor-count sibling merge (SP.compact_cover), verified
     against a DuckDB oracle with the same single-pass formulation (and
     against cells.compact in tests/test_cells.py)."""
-    _prep(spark)
     pts = SP.with_point_cell(points_df(spark, sf_dir), 7)
     dense = pts.select("cell_id").distinct()
     return SP.compact_cover(dense, 7).select("cell_id", "level")
@@ -255,7 +240,6 @@ def spatial_range_join(spark, sf_dir):
     cover cell, so the per-cover-cell counts sum to the input row count
     (asserted in tests); the DuckDB oracle reruns the identical shift
     arithmetic over the same compact-cover CTE."""
-    _prep(spark)
     pts = SP.with_point_cell(points_df(spark, sf_dir), 12)
     dense = (
         SP.with_point_cell(points_df(spark, sf_dir), 7)
@@ -282,7 +266,6 @@ def spatial_hex_cover(spark, sf_dir):
     axial hex binning with exact cube rounding — shared SQL fragments,
     bit-identical in DuckDB; also twinned in numpy (cells.hex_cell,
     nearest-center property test)."""
-    _prep(spark)
     from .sqlgen import apply_steps, hex_cell_steps
 
     steps = hex_cell_steps("lon", "lat", 0.05, "hex_id")
@@ -302,7 +285,6 @@ def spatial_hex_kring(spark, sf_dir):
     k-ring's equi-join shape: histogram once, explode 7 offsets,
     equi-join on the neighbor id.  All int64 arithmetic, bit-identical
     in DuckDB."""
-    _prep(spark)
     from .sqlgen import apply_steps, hex_cell_steps
 
     steps = hex_cell_steps("lon", "lat", 0.05, "hex_id")
@@ -332,7 +314,6 @@ def country_areas(spark, sf_dir):
     VALUES literal + the identical running-window fold in ring-edge
     order (the OSM way-length trick) — shoelace terms are ``* - +``
     only, perimeter adds SQRT; no transcendentals, no reassociation."""
-    _prep(spark)
     from .harness import edges_values_sql_indexed
 
     return spark.sql(f"""
@@ -366,7 +347,6 @@ def osm_way_assembly(spark, sf_dir):
     regenerate them).  Length is a left fold in ref order on BOTH
     engines (Spark: aggregate(); DuckDB: running-window sum), so the
     doubles are bit-identical."""
-    _prep(spark)
     from . import osm as OSM
     from .harness import NODE_X, NODE_Y
 
@@ -646,7 +626,6 @@ def _minhash_sig_df(docs):
     # across cores — the corpus arrives as ONE parquet split, so this
     # md5-dense pre-shuffle stage otherwise runs in a single task
     # (guide §2.5; no-op at scale where the scan is already wide).
-    from .queries_ext import _spread
 
     sh = _spread(docs).selectExpr(
         "doc_id",

@@ -8,16 +8,17 @@ Registered into queries.QUERIES via QUERIES_EXT.
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
+from .qcommon import (
+    _t,
+    _drain_confs,
+    _drain_dirs,
+    _fixture_images,
+    _spread,
+    _stream_base,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -106,70 +107,6 @@ _SHINGLES_FROM_WORDS = (
     "element_at(words, least(i + 1, size(words))), ' ', "
     "element_at(words, least(i + 2, size(words))))))"
 )
-
-
-import contextlib
-
-
-@contextlib.contextmanager
-def _drain_confs(spark, parts: str = "8", nodata: bool = True):
-    """Scoped confs for a streaming drain or tiny-relation iterative
-    loop (saved/restored): shuffle partitions down to ``parts``
-    (gotcha 16d — state stores / loop fixed cost = partitions ×
-    batches) and whole-stage codegen OFF (r06: every micro-batch's
-    incremental plan compiles FRESH janino classes — measured
-    12.6 s → 5.4 s first-run on streaming_left_join, 5.7 → 5.1 warm;
-    the drained relations are micro-batch-sized, so interpreted row
-    processing is the right trade at any scale, while fact-table
-    batch stages elsewhere keep codegen).
-
-    ``nodata=False`` additionally disables Spark's post-availableNow
-    no-data micro-batches (r06): a drain whose watermark advancement
-    comes ENTIRELY from explicit filler FILES (gotchas 16a/16c — its
-    eviction horizons are proven against the final DATA-batch
-    watermark) only re-pays the per-batch fixed cost (incremental plan
-    + state-store commit round) in those extra batches.  Measured
-    ~0.5-1.1 s per drain, row-identical output (parity PASS for the
-    four filler-driven drains).  Drains whose results DO flush in a
-    no-data batch (native session windows, chained aggs — measured
-    FAIL with the conf off) keep the default."""
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_wscg = spark.conf.get("spark.sql.codegen.wholeStage")
-    old_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    if not nodata:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        spark.conf.set("spark.sql.codegen.wholeStage", old_wscg)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", old_nodata
-        )
-
-
-def _spread(df, key: str = "doc_id"):
-    """Scale-ADAPTIVE underparallelism fix (r06, guide §2.5 "input
-    skew ... repartition immediately after the read"): a small corpus
-    arrives as ONE parquet split, so every expensive projection chained
-    on the scan (interpreted shingle HOFs, md5 chains) runs in a single
-    task while the other cores idle.  Hash-repartition on the row key
-    ONLY when the scan has fewer partitions than the session's
-    parallelism — a 100 TB scan already has thousands of splits and
-    takes the `df` branch untouched (no extra exchange of the corpus).
-    Deterministic key (never round-robin: rand-keyed repartition breaks
-    under task retry, SPARK-38388) and row-identity is trivially
-    preserved."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par, F.col(key))
-    return df
 
 
 def _shingle_sets(docs):
@@ -887,30 +824,6 @@ def semi_join_parts(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _fixture_sf(sf_dir: str) -> float:
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return float(m.group(1)) if m else 0.001
-
-
-def _fixture_images(spark, sf_dir, pin_sf: float | None = None):
-    """Image fixture tables.  ``pin_sf`` pins a FIXED scale factor
-    regardless of sf_dir — required for the golden-backed oracle-checked
-    image queries, whose DuckDB oracles and committed goldens embed the
-    sf0.01 fixture (r03 review: following sf_dir made Spark and oracle
-    read different fixtures at any other scale)."""
-    import os
-
-    from .jobs.rai import fixture_dir
-
-    d = fixture_dir(pin_sf if pin_sf is not None else _fixture_sf(sf_dir))
-    from .tablecache import read_table
-
-    return (
-        read_table(spark, os.path.join(d, "images.parquet")),
-        read_table(spark, os.path.join(d, "roads.parquet")),
-    )
-
-
 def image_rai_summary(spark, sf_dir):
     """Flagship over the FULL IMAGES fixture: geocode → country →
     burn/cost-distance → per-country RAI.  ORACLE-CHECKED (r04; was
@@ -1527,73 +1440,6 @@ def multimodal_video_cuts(spark, sf_dir):
     return video_scene_cuts(synth_video_table(spark, 32))
 
 
-_STREAM_ROOTS: set = set()
-
-
-def _stream_base(spark, prefix: str) -> str:
-    """Private temp dir for one streaming invocation (input copy +
-    checkpoint + sink), under a per-(user, Spark-app) root that is
-    deleted at interpreter exit — so streaming builders can return
-    their sink DataFrames LAZILY (r04 verdict item 8: the old
-    _drain_and_cleanup collect()ed every streaming result into the
-    driver, silently capping result size; no queries() builder calls
-    .collect() anymore).  Stale sibling roots from dead sessions are
-    reaped opportunistically after 7 days — never the current session's
-    root, whose mtime heartbeats on every call — bounding /tmp growth
-    the same way the dim-table publish does."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    # r06 guide §6: these dirs hold ONLY ephemeral per-invocation state
-    # (input copy, micro-batch checkpoint, sink) deleted at exit — on
-    # the bench host the HDFS-backed state stores fsync+rename a delta
-    # file per store per partition per batch, which on a slow-syscall
-    # ext4 /tmp is the dominant drain cost.  Prefer tmpfs when present
-    # ($TMPDIR still wins); a production deployment configures durable
-    # checkpoint locations through its own conf, never this helper.
-    tmp = tempfile.gettempdir()
-    if tmp == "/tmp" and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
-    ):
-        try:
-            # r06 review fix: containers commonly mount /dev/shm at
-            # 64 MB — only prefer it with real headroom (≥ 4 GB free),
-            # else the drains would ENOSPC where /tmp worked.
-            sv = os.statvfs("/dev/shm")
-            if sv.f_bavail * sv.f_frsize >= 4 << 30:
-                tmp = "/dev/shm"
-        except OSError:
-            pass
-    base = os.path.join(tmp, f"sdg_stream_u{os.getuid()}")
-    os.makedirs(base, exist_ok=True)
-    root = os.path.join(
-        base, spark.sparkContext.applicationId.replace("/", "_")
-    )
-    os.makedirs(root, exist_ok=True)
-    os.utime(root)  # heartbeat: a live session keeps its root fresh
-    now = time.time()
-    for name in os.listdir(base):
-        p = os.path.join(base, name)
-        # NEVER the current session's root (r04 review: an idle-then-
-        # resumed session used to reap its OWN sink files out from
-        # under lazily-returned DataFrames); 7-day TTL + the heartbeat
-        # above keeps the cross-session window theoretical
-        if p == root:
-            continue
-        try:
-            if os.path.isdir(p) and now - os.path.getmtime(p) > 7 * 86400:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # concurrent reaper / permission race — best effort
-    if root not in _STREAM_ROOTS:
-        _STREAM_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=root)
-
-
 def streaming_hourly_closed(spark, sf_dir):
     """§2.10: a REAL Structured Streaming run (file source → watermarked
     hourly window agg → availableNow → parquet sink), returned as the
@@ -1606,11 +1452,8 @@ def streaming_hourly_closed(spark, sf_dir):
     from . import streaming as STR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "hourly_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "hourly_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     STR.stream_events_hourly(spark, in_dir, out, ck)
     res = spark.read.parquet(out).select(
         F.unix_timestamp("hour_start").alias("hour_epoch"),
@@ -1630,11 +1473,8 @@ def streaming_dedup_docs(spark, sf_dir):
 
     from . import streaming as STR
 
-    base = _stream_base(spark, "sdedup_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "sdedup_")
     shutil.copy(f"{sf_dir}/documents.parquet", os.path.join(in_dir, "documents.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     STR.stream_dedup_docs(spark, in_dir, out, ck)
     res = (
         spark.read.parquet(out)
@@ -1660,12 +1500,9 @@ def streaming_dedup_watermarked(spark, sf_dir):
 
     from . import streaming as STR
 
-    base = _stream_base(spark, "sdwm_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "sdwm_")
     shutil.copy(f"{sf_dir}/documents.parquet",
                 os.path.join(in_dir, "documents.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     STR.stream_dedup_docs_watermarked(spark, in_dir, out, ck)
     return (
         spark.read.parquet(out)
@@ -1686,11 +1523,8 @@ def streaming_interval_join(spark, sf_dir):
     from . import streaming as STR
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sij_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "sij_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     STR.stream_interval_join(spark, in_dir, out, ck)
     res = (
         spark.read.parquet(out)

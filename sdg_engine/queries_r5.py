@@ -15,14 +15,18 @@ Registered into queries.QUERIES via QUERIES_R5.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
+from .qcommon import (
+    _t,
+    _drain_confs,
+    _drain_dirs,
+    _fixture_images,
+    _pin_batch_order,
+    _spread,
+    _stream_base,
+)
 
 
 # events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to
@@ -260,7 +264,6 @@ def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     # r06: rounds under _drain_confs (8 partitions + codegen off,
     # restored) — per-round plan churn over the rank relation, same
     # measurement as _components_jump
-    from .queries_ext import _drain_confs
 
     with _drain_confs(edges.sparkSession):
         ew = edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
@@ -348,7 +351,6 @@ def road_graph_bfs(spark, sf_dir):
     RECURSIVE CTE over the same roads parquet.
     Output: hops -> node count + node-id checksum (BIGINT sums, exact).
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -375,7 +377,6 @@ def road_graph_bfs(spark, sf_dir):
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         visited = seed.localCheckpoint()
@@ -483,8 +484,6 @@ def roads_simplify_dp(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from .queries_ext import _fixture_images
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
 
     def _dp(batches):
@@ -519,7 +518,6 @@ def image_hillshade(spark, sf_dir):
     INDEPENDENT golden (generator pixels + clamp-indexed Horn twin).
     """
     from .ops.payload import hillshade_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -539,7 +537,6 @@ def image_sobel_edges(spark, sf_dir):
     clamp-indexed Sobel twin — all integer, so parity is trivial).
     """
     from .ops.payload import sobel_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -562,7 +559,6 @@ def image_flow_d8(spark, sf_dir):
     DFS — a different accumulation algorithm than the engine sweep).
     """
     from .ops.payload import d8_flow_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -582,7 +578,6 @@ def image_watershed(spark, sf_dir):
     stacked-argmax targets + memoized scalar chain walking).
     """
     from .ops.payload import watershed_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -601,7 +596,6 @@ def image_viewshed(spark, sf_dir):
     reduced via running max-slope rationals instead).
     """
     from .ops.payload import viewshed_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -620,7 +614,6 @@ def image_pit_fill(spark, sf_dir):
     fixpoint iterated as a shifted-view Bellman recurrence).
     """
     from .ops.payload import pit_fill_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -647,7 +640,6 @@ def image_zonal_stats(spark, sf_dir):
     from . import fixtures as FX
     from .ops import payload as PL
     from .ops import spatial as SP
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -781,7 +773,6 @@ def mvt_pyramid_simplified(spark, sf_dir):
     from pyspark.sql import DataFrame
 
     from . import mvt as MVT
-    from .queries_ext import _fixture_images, _stream_base
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     roads = roads.select("road_id", "coords").repartition(8).localCheckpoint()
@@ -815,8 +806,6 @@ def country_convex_hull(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from .queries_ext import _fixture_images
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     verts = roads.select(
         "country_code", F.explode("coords").alias("c")
@@ -846,7 +835,6 @@ def image_contours(spark, sf_dir):
     oracle: committed independent golden (generator pixels + explicit
     16-entry LUT twin)."""
     from .ops.payload import contour_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -861,7 +849,6 @@ def image_regions(spark, sf_dir):
     a map-only stage.  Oracle: committed INDEPENDENT flood-fill golden.
     jpg excluded, 500-image harness subset."""
     from .ops.raster import region_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -1026,7 +1013,6 @@ def snapshot_compaction(spark, sf_dir):
     duplicated by the rewrite flips it) AND the exact before/after
     file counts (deterministic: explicit repartition widths).
     """
-    from .queries_ext import _stream_base
     from .storage import (
         compact_snapshot,
         count_data_files,
@@ -1083,7 +1069,6 @@ def roads_buffer_cells(spark, sf_dir):
     the identical fragments in DuckDB over the same roads parquet.
     """
     from .ops.spatial import road_segments
-    from .queries_ext import _fixture_images
     from .sqlgen import apply_steps, grid_index_expr, point_seg_dist_steps
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -1137,12 +1122,9 @@ def streaming_left_join(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "slj_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "slj_")
     t = pq.read_table(f"{sf_dir}/events.parquet")
     # DEMO BOUND: first 10 days only — join-state churn is per-row and
     # the full sf0.1 month ran 125 s in the bench for no extra semantic
@@ -1160,10 +1142,11 @@ def streaming_left_join(spark, sf_dir):
     # ts) and the two trailing fillers still drive the post-jump
     # evictions (16a), so the extra chunk boundaries only re-paid
     # per-batch fixed cost (~1-1.5 s each).  Parity PASS sf0.01+sf0.1.
+    chunks = []
     for k in range(2):  # chronological chunks -> monotone watermark
+        chunks.append(os.path.join(in_dir, f"chunk-{k:02d}.parquet"))
         pq.write_table(
-            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
-            os.path.join(in_dir, f"chunk-{k:02d}.parquet"),
+            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2), chunks[-1]
         )
     # trailing FILLER batches (gotcha 16a: outer-join NULL eviction
     # runs at end of the batch AFTER the watermark crosses the bound —
@@ -1172,26 +1155,16 @@ def streaming_left_join(spark, sf_dir):
     # watermark without touching join state.
     filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
     for k in range(2):
-        pq.write_table(
-            filler, os.path.join(in_dir, f"chunk-9{k}-filler.parquet")
-        )
-    # r06 review fix: FileStreamSource orders pending files by mtime
-    # ONLY (ms resolution, no path tie-break) — tiny sequential writes
-    # on tmpfs can tie, and the chronological-chunk -> monotone-
-    # watermark contract needs a deterministic order.  Pin strictly
-    # increasing whole-second mtimes explicitly.
-    import time as _time
-
-    _t0 = _time.time()
-    for _i, _f in enumerate(sorted(os.listdir(in_dir))):
-        os.utime(os.path.join(in_dir, _f), (_t0 + _i, _t0 + _i))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
+        chunks.append(os.path.join(in_dir, f"chunk-9{k}-filler.parquet"))
+        pq.write_table(filler, chunks[-1])
+    # the chronological-chunk -> monotone-watermark contract needs the
+    # drain's batches in write order
+    _pin_batch_order(chunks)
     # stateful-join state stores (4 per join) are one per shuffle
     # partition PER BATCH — at 32 partitions that is 128 store commits
     # a batch, pure fixed cost at harness size.  8 is plenty here;
     # _drain_confs also turns codegen off for the drain (r06 — see its
     # docstring) and restores both right after.
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, nodata=False):
         STR.stream_interval_join_left(spark, in_dir, out, ck,
@@ -1253,7 +1226,6 @@ def road_intersections(spark, sf_dir):
     where covers differ.
     """
     from .ops.spatial import road_segments, segments_with_cells
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     segs = road_segments(roads).select(
@@ -1303,7 +1275,6 @@ def snapshot_diff(spark, sf_dir):
 
     Oracle: the same set algebra over the deterministic doc_id ranges
     the commits wrote."""
-    from .queries_ext import _stream_base
     from .storage import read_snapshot, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -1858,7 +1829,6 @@ def triangle_count_roads(spark, sf_dir):
     construction in DuckDB over the same roads parquet.
     Output: one row — triangle count + node-id checksum.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -2069,7 +2039,6 @@ def route_interpolate(spark, sf_dir):
     windows); output one row per road, aggregated per kind here so the
     driver compare stays tiny.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     verts = roads.selectExpr(
@@ -2118,7 +2087,6 @@ def _spw_edges(spark, sf_dir):
     """Weighted road-graph edges: the BFS cell quantization plus an
     integer Euclidean weight in cell-mils between cell centers
     (FLOOR(sqrt*1000) of integer deltas — deterministic)."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -2165,7 +2133,6 @@ def shortest_path_weighted(spark, sf_dir):
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         dist = seed.localCheckpoint()
@@ -2257,7 +2224,6 @@ def phrase_search(spark, sf_dir):
     """
     # r06: _spread — the posexplode over the corpus otherwise runs in
     # the single-split scan task (guide §2.5)
-    from .queries_ext import _spread
 
     toks = (
         _spread(_t(spark, sf_dir, "documents"))
@@ -2560,7 +2526,6 @@ def geohash_cells(spark, sf_dir):
     sqlgen.geohash_steps fragments) + one hash agg — zero joins.
     """
     from .harness import PX, PY
-    from .queries_ext import _spread
     from .sqlgen import apply_steps, geohash_steps
 
     # r06: _spread — the 6-level base-32 string construction otherwise
@@ -2600,7 +2565,6 @@ def contamination_check(spark, sf_dir):
     # r06: _spread — the shingle explode + concat_ws + the distinct's
     # partial aggregate otherwise run inside the corpus scan's single
     # task (guide §2.5; no-op on a wide scan)
-    from .queries_ext import _spread
 
     docs = _spread(_t(spark, sf_dir, "documents")).selectExpr(
         "doc_id", "split(text, ' ') AS tk"
@@ -2781,7 +2745,6 @@ def ann_pq_topk(spark, sf_dir):
     # r06: _spread — the interpreted HOF distance evaluations
     # (sub × 16 centroids per assign pass) otherwise run in the
     # single-split scan's one task (guide §2.5)
-    from .queries_ext import _spread
 
     emb = _spread(_t(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id", F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("emb")
@@ -2857,7 +2820,6 @@ def link_prediction_roads(spark, sf_dir):
     standard LP truncation); existing edges leave via a left-anti
     equi-join.  Same und/deg construction as triangle_count_roads.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -2942,7 +2904,6 @@ def _components_jump(edges, verts_k, max_iter: int = 12,
     # relation is the SMALL side by construction (cells / component
     # ids), so interpreted row processing is the right trade at any
     # scale; fact-table stages elsewhere keep codegen.
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, parts=str(n_parts)):
         return _components_jump_inner(edges, verts_k, max_iter)
@@ -3011,7 +2972,6 @@ def spatial_dbscan(spark, sf_dir):
     both come from a 9-offset explode, never a distance join.  Oracle:
     identical fragments + a pruned recursive-CTE reachability min.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     g = roads.selectExpr("explode(coords) AS c").selectExpr(
@@ -3091,7 +3051,6 @@ def snapshot_zone_map(spark, sf_dir):
     file counts (any pruning bug either reads a wrong file set or
     flips the aggregate).
     """
-    from .queries_ext import _stream_base
     from .storage import read_snapshot_pruned, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -3295,7 +3254,6 @@ def label_propagation_roads(spark, sf_dir):
     shortest_path_weighted does not arise).
     Output: community size + node-id checksum per surviving label.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -3317,7 +3275,6 @@ def label_propagation_roads(spark, sf_dir):
     ).localCheckpoint()  # probed every round
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         labels = dirs.selectExpr("src AS v", "src AS label").distinct()
@@ -3357,7 +3314,6 @@ def voronoi_assign(spark, sf_dir):
     keyed by vertex, then a 16-row rollup — the fact table never hash-
     exchanges on anything wider than the vertex key.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     px = _VOR_Q.format(c="c.x")
@@ -3399,8 +3355,6 @@ def source_binaryfile_images(spark, sf_dir):
     exchange is the 6-row fmt rollup.
     """
     import os
-
-    from .queries_ext import _fixture_images, _stream_base
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     out = f"{_stream_base(spark, 'binfiles_')}/files"
@@ -3519,7 +3473,7 @@ def dedup_containment(spark, sf_dir):
     # from it with stack() (n_a = the direction's own set size).
     # Result rows identical, oracle unchanged.  _spread parallelizes
     # the single-split scan's shingle projection (guide §2.5).
-    from .queries_ext import _shingle_sets, _spread
+    from .queries_ext import _shingle_sets
 
     docs = _t(spark, sf_dir, "documents")
     sets = _shingle_sets(_spread(docs)).localCheckpoint()
@@ -3585,7 +3539,6 @@ def streaming_snapshot_sink(spark, sf_dir):
     import os
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
     from .storage import read_snapshot, snapshot_history
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -3595,7 +3548,6 @@ def streaming_snapshot_sink(spark, sf_dir):
     ck = os.path.join(base, "ck")
     if not os.path.exists(in_dir):
         _t(spark, sf_dir, "events").repartition(4).write.parquet(in_dir)
-        from .queries_ext import _drain_confs
 
         with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
             STR.stream_snapshot_sink(spark, in_dir, table, ck)
@@ -3627,7 +3579,6 @@ def snapshot_partition_prune(spark, sf_dir):
     column via basePath, so the residual filter and the aggregate are
     load-bearing on the round trip.
     """
-    from .queries_ext import _stream_base
     from .storage import read_snapshot_partitioned, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -3670,7 +3621,6 @@ def osm_qatile_source(spark, sf_dir):
     from . import mvt as MVT
     from . import osm as OSM
     from .harness import segments_df
-    from .queries_ext import _stream_base
 
     spark.dataSource.register(OSM.make_mbtiles_datasource())
     segs = segments_df(spark, sf_dir)
@@ -3783,7 +3733,6 @@ def kcore_roads(spark, sf_dir):
     (an extra round changes nothing).  Output: one row — core node
     count, node-id checksum, core edge count.
     """
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     node = _BFS_NODE.format(x="c.x", y="c.y")
@@ -3802,7 +3751,6 @@ def kcore_roads(spark, sf_dir):
     )
     # r06: peel rounds under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         for _ in range(_KCORE_ROUNDS):
@@ -3937,7 +3885,6 @@ def snapshot_mor_deletes(spark, sf_dir):
     twice, lost in compaction, or time travel seeing the delete —
     flips a pinned number or the aggregate.
     """
-    from .queries_ext import _stream_base
     from .storage import (
         _read_manifest,
         compact_snapshot,
@@ -3993,7 +3940,6 @@ def snapshot_position_deletes(spark, sf_dir):
     the aggregate sees them back).  Pinned: tombstone row count
     (recovered relationally in the oracle), 1 position-delete file,
     3 data files, and the pre-delete row count via time travel."""
-    from .queries_ext import _stream_base
     from .storage import (
         _read_manifest,
         count_data_files,
@@ -4043,7 +3989,6 @@ def snapshot_metadata_tables(spark, sf_dir):
     one equality delete; the check cross-verifies the files table's
     FOOTER row counts against relational counts over the same filters
     plus the history table's commit/delete-file accounting."""
-    from .queries_ext import _stream_base
     from .storage import (
         delete_from_snapshot,
         snapshot_files_df,
@@ -4209,7 +4154,6 @@ def image_texture_glcm(spark, sf_dir):
     queries.  Oracle: committed INDEPENDENT golden (scatter-add
     matrix twin vs the engine's flat bincount)."""
     from .ops.payload import glcm_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -4227,7 +4171,6 @@ def roads_sinuosity(spark, sf_dir):
     coords array (no window), micro-unit snap on the final ratio
     (only + - * / sqrt floor on the float path).  One hash exchange
     on road_id; per-kind rollup keeps the compare tiny."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     verts = roads.selectExpr(
@@ -4285,7 +4228,6 @@ def image_quadtree(spark, sf_dir):
     under containment; a genuinely different algorithm than the
     engine's top-down split stack)."""
     from .ops.payload import quadtree_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -4308,16 +4250,11 @@ def streaming_static_enrich(spark, sf_dir):
     import shutil
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "senrich_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "senrich_")
     shutil.copy(f"{sf_dir}/events.parquet",
                 os.path.join(in_dir, "events.parquet"))
-    out = os.path.join(base, "out")
-    ck = os.path.join(base, "ck")
     dim = (
         spark.read.parquet(os.path.join(in_dir, "events.parquet"))
         .select("user_id").distinct()
@@ -4328,7 +4265,6 @@ def streaming_static_enrich(spark, sf_dir):
             "ELSE 'platinum' END AS tier",
         )
     )
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
         STR.stream_static_enrich(spark, in_dir, out, ck, dim)
@@ -4351,7 +4287,6 @@ def snapshot_rollback(spark, sf_dir):
     head (= snapshot-1 content); the bad-append row count is
     recovered via as-of(2) and tied out relationally; commit count
     and head mode pinned."""
-    from .queries_ext import _stream_base
     from .storage import (
         read_snapshot,
         rollback_snapshot,
@@ -4414,7 +4349,6 @@ def snapshot_wap_publish(spark, sf_dir):
     pytest.  Oracle: final + pre-publish aggregates relationally, and
     the published snapshot id pinned.
     """
-    from .queries_ext import _stream_base
     from .storage import get_ref, read_snapshot, set_ref, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -4540,7 +4474,6 @@ def cells_line_density(spark, sf_dir):
     the explode fanout is |vertices|, the agg output is grid-bounded.
     Output per occupied cell: segment count, summed length (micro).
     """
-    from .queries_ext import _fixture_images
     from .sqlgen import grid_index_expr
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -4580,7 +4513,6 @@ def snapshot_bloom_index(spark, sf_dir):
     """
     from functools import reduce
 
-    from .queries_ext import _stream_base
     from .storage import read_snapshot_point, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -4617,7 +4549,6 @@ def snapshot_incremental_mv(spark, sf_dir):
     sizes ride along as columns (computed relationally on both
     sides).
     """
-    from .queries_ext import _stream_base
     from .storage import (
         _read_manifest,
         delete_from_snapshot,
@@ -4693,7 +4624,6 @@ def snapshot_zorder_cluster(spark, sf_dir):
     shuffle.  Oracle: the box aggregate relationally + all three
     pinned counts.
     """
-    from .queries_ext import _stream_base
     from .storage import (
         cluster_snapshot,
         read_snapshot_pruned_box,
@@ -4845,7 +4775,6 @@ def doc_normalized_dedup(spark, sf_dir):
 
     ASCII-range regexes behave identically in Java regex (Spark) and
     RE2 (DuckDB); the oracle runs the same normalization chain."""
-    from .queries_ext import _spread
 
     # r06 guide §2.5: the two-regex normalization chain is the query's
     # CPU and the harness scan is one split — _spread parallelizes the
@@ -5018,7 +4947,6 @@ def image_slope_aspect(spark, sf_dir):
     scalar per-pixel octant chain vs the engine's pad-slice
     np.select)."""
     from .ops.payload import slope_aspect_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -5037,7 +4965,6 @@ def image_strahler(spark, sf_dir):
     committed INDEPENDENT golden (stacked-argmax targets + memoized
     postorder DFS)."""
     from .ops.payload import strahler_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -5055,7 +4982,6 @@ def image_hist_equalize(spark, sf_dir):
     INDEPENDENT golden (scalar counting-dict CDF vs the engine's
     bincount/cumsum LUT)."""
     from .ops.payload import hist_equalize_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -5073,7 +4999,6 @@ def image_morphology(spark, sf_dir):
     exact int64.  Oracle: committed INDEPENDENT golden (np.ix_ clamp
     gathers per offset)."""
     from .ops.payload import morphology_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -5178,7 +5103,6 @@ def roads_supercover_cells(spark, sf_dir):
     packed-cell checksum.  Plan: two Generates + one hash agg on
     (kind, cell); nothing is quadratic and the agg output is
     grid-bounded."""
-    from .queries_ext import _fixture_images
     from .sqlgen import grid_index_expr
 
     n = 1 << _SC_LEVEL
@@ -5331,7 +5255,6 @@ def roads_dissolve(spark, sf_dir):
     components primitive (O(log diameter) rounds, kind-scoped node
     keys so components never cross kinds).  Oracle: pruned
     recursive-CTE reachability min over the identical node keys."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     na = _BFS_NODE.format(
@@ -5372,7 +5295,6 @@ def snapshot_expire(spark, sf_dir):
     is untouched, and a time-travel read of an expired snapshot now
     fails LOUDLY (pinned via the asof_fails flag).  Metadata-only plus
     O(orphans) directory removals — no live data is ever rewritten."""
-    from .queries_ext import _stream_base
     from .storage import (
         count_data_files,
         expire_snapshots,
@@ -5481,16 +5403,11 @@ def streaming_session_window(spark, sf_dir):
     import shutil
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sesswin_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "sesswin_")
     shutil.copy(f"{sf_dir}/events.parquet",
                 os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):  # r06: codegen off per drained batch
         STR.stream_sessions_native(spark, in_dir, out, ck)
@@ -5544,8 +5461,6 @@ def orc_roundtrip_events(spark, sf_dir):
     integer mils BEFORE the ORC leg so the round trip compares exact
     integers, not re-parsed doubles."""
     import os
-
-    from .queries_ext import _stream_base
 
     ev = _t(spark, sf_dir, "events").selectExpr(
         "event_id", "user_id", "event_type",

@@ -16,14 +16,10 @@ Registered into queries.QUERIES via QUERIES_R5B.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
+from .qcommon import _t, _drain_confs, _fixture_images
 
 
 _ORDER_CENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
@@ -93,7 +89,6 @@ def recursive_order_chain(spark, sf_dir):
     # for the walk measured 9.5 s → 2.6 s first-plan (2.8 → 2.5 warm).
     # The WITH RECURSIVE surface is unchanged; only where the action
     # runs moved (inside the builder, like every streaming drain).
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         return spark.sql(
@@ -203,7 +198,6 @@ def hits_roads(spark, sf_dir):
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         hub = nodes.select("node", F.lit(1).cast("bigint").alias("h"))
@@ -466,7 +460,6 @@ def pca_power_iteration(spark, sf_dir):
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         v = cov.select("j").distinct().selectExpr(
@@ -571,7 +564,6 @@ def closeness_roads(spark, sf_dir):
     (reached - 1) / sum(hops) in FLOOR micros.  Oracle: DuckDB
     recursive CTE over (seed, node) pairs with MIN(hops) dedup — the
     road_graph_bfs twin generalized to a labeled walk."""
-    from .queries_ext import _fixture_images
     from .queries_r5 import _BFS_NODE
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -598,7 +590,6 @@ def closeness_roads(spark, sf_dir):
     )
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         visited = seeds.localCheckpoint()

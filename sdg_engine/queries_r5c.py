@@ -16,17 +16,19 @@ Registered into queries.QUERIES via QUERIES_R5C.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from .qcommon import (
+    _t,
+    _drain_confs,
+    _drain_dirs,
+    _fixture_images,
+    _pin_batch_order,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOUR_US = 3_600_000_000
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -383,7 +385,6 @@ def roads_hausdorff(spark, sf_dir):
     vertex fanout per pair is |A| x |B| <= a few hundred rows, grouped
     twice (min over B per a-vertex, then max over a-vertices).  The
     blocking key is COALESCE-wrapped (gotcha 11)."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     first = roads.selectExpr(
@@ -438,7 +439,6 @@ def image_tpi_tri(spark, sf_dir):
     committed INDEPENDENT golden (generator pixels + np.ix_ clamp
     gathers vs the engine's pad slices)."""
     from .ops.payload import tpi_tri_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -457,7 +457,6 @@ def image_flow_length(spark, sf_dir):
     rounds).  Map-only; exact int64.  Oracle: committed INDEPENDENT
     golden (stacked-argmax targets + memoized scalar chain walks)."""
     from .ops.payload import flow_length_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -586,7 +585,6 @@ def betweenness_roads(spark, sf_dir):
     Oracle: the identical recurrence as a generated linear CTE chain
     (single back-reference per round, MATERIALIZED multi-referenced
     bases — the label_propagation/shortest_path pattern)."""
-    from .queries_ext import _fixture_images
     from .queries_r5 import _BFS_NODE
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -613,7 +611,6 @@ def betweenness_roads(spark, sf_dir):
     # r06: both sweep loops under _drain_confs (codegen off + 8
     # partitions, restored) — per-round plan churn over layer-sized
     # relations, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         layer = seeds.selectExpr(
@@ -697,7 +694,6 @@ def image_box_downscale(spark, sf_dir):
     Oracle: committed INDEPENDENT golden (generator pixels + reshape
     blocks vs the engine's strided slices)."""
     from .ops.payload import box_downscale_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -814,7 +810,6 @@ def image_median3(spark, sf_dir):
     committed INDEPENDENT golden (generator pixels + sorted np.ix_
     clamp gathers vs the engine's pad-slice np.partition)."""
     from .ops.payload import median3_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -835,7 +830,6 @@ def roads_resample_points(spark, sf_dir):
     Plan shape: one hash exchange on road_id (the windows), a 7x
     explode on the segment rows, one filtered projection; per-(kind,k)
     rollup keeps the compare tiny."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     verts = roads.selectExpr(
@@ -955,7 +949,6 @@ def events_markov_stationary(spark, sf_dir):
     tm = trans.join(rowsum, "t").localCheckpoint()
     # r06: loop under _drain_confs (codegen off + 8 partitions,
     # restored) — per-round plan churn, the _components_jump lesson
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         pi = rowsum.selectExpr(
@@ -990,8 +983,6 @@ def roads_frechet(spark, sf_dir):
     self-loop moves (the events_dtw technique with a max-min
     semiring)."""
     import pandas as pd
-
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     first = roads.selectExpr(
@@ -1306,12 +1297,9 @@ def streaming_user_streaks(spark, sf_dir):
     import os
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "streak_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "streak_")
     ev = _t(spark, sf_dir, "events")
     # ONE ntile window (contiguous time-order quartiles).  r06: the
     # four chunks are written by a SINGLE partitionBy("chunk") job —
@@ -1328,28 +1316,21 @@ def streaming_user_streaks(spark, sf_dir):
     import glob as _glob
     import shutil
 
-    chunks_dir = os.path.join(base, "chunks")
+    chunks_dir = os.path.join(os.path.dirname(in_dir), "chunks")
     ranked.coalesce(1).write.partitionBy("chunk").parquet(chunks_dir)
-    import time as _time
-
-    t_base = _time.time()
+    chunks = []
     for k in range(2):
         part = _glob.glob(
             os.path.join(chunks_dir, f"chunk={k + 1}", "part-*.parquet")
         )[0]
-        dst = os.path.join(in_dir, f"chunk{k}.parquet")
-        shutil.move(part, dst)
-        # r06 review fix: batch order must NOT rest on move timing —
-        # both parts come from ONE write job and a same-filesystem
-        # rename preserves near-identical mtimes, while Spark's
-        # FileStreamSource orders pending files by TIMESTAMP ONLY (no
-        # path tie-break), so a millisecond tie would let chunk1 drain
-        # before chunk0 and flip the order-sensitive state fold.  Pin
-        # strictly increasing whole-second mtimes explicitly.
-        os.utime(dst, (t_base + k, t_base + k))
+        chunks.append(os.path.join(in_dir, f"chunk{k}.parquet"))
+        shutil.move(part, chunks[-1])
+    # batch order must NOT rest on move timing: both parts come from ONE
+    # write job and a same-filesystem rename preserves near-identical
+    # mtimes, so a tie would let chunk1 drain before chunk0 and flip the
+    # order-sensitive state fold
+    _pin_batch_order(chunks)
     shutil.rmtree(chunks_dir)
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, nodata=False):
         STR.stream_user_streaks(spark, in_dir, out, ck)

@@ -16,20 +16,22 @@ Registered into queries.QUERIES via QUERIES_R5D.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from .qcommon import (
+    _t,
+    _drain_confs,
+    _drain_dirs,
+    _fixture_images,
+    _stream_base,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOLD_US = 1_800_000_000  # 30-minute hold per event
 _HOUR_US_R5D = 3_600_000_000
 _DAY_US = 86_400_000_000
 _MIN_US = 60_000_000
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -175,7 +177,6 @@ def roads_bearing_octants(spark, sf_dir):
     hash agg onto the (kind, octant) grid — |kinds| x 8 groups at any
     scale.  The oracle derives segments by direct list indexing (no
     window at all), so the window plumbing is independently checked."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     verts = roads.selectExpr(
@@ -314,7 +315,6 @@ def mst_roads(spark, sf_dir):
     # union-localCheckpoint chain of edge frames (2 actions/round +
     # a final scan, and the chain itself re-uploaded per round).
     # The selected edges per round and hence the sums are unchanged.
-    from .queries_ext import _drain_confs
 
     n_mst = tot_w = chk = 0
     with _drain_confs(spark_):
@@ -422,7 +422,6 @@ def image_otsu(spark, sf_dir):
     (Counter histogram + incremental running sums + Fraction compare
     vs the engine's bincount cumsums)."""
     from .ops.payload import otsu_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -450,16 +449,11 @@ def streaming_chained_aggs(spark, sf_dir):
     import shutil
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "chained_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "chained_")
     shutil.copy(f"{sf_dir}/events.parquet",
                 os.path.join(in_dir, "events.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         STR.stream_chained_windows(spark, in_dir, out, ck)
@@ -484,7 +478,6 @@ def snapshot_partition_evolution(spark, sf_dir):
     spec; pruning consults the spec each file was written under.
     Scanned/total file counts are pinned; the doc_id split keeps both
     commits load-bearing in the aggregate."""
-    from .queries_ext import _stream_base
     from .storage import read_snapshot_partitioned, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -588,8 +581,6 @@ def xml_roundtrip_events(spark, sf_dir):
     straight off the source parquet."""
     import os
 
-    from .queries_ext import _stream_base
-
     ev = _t(spark, sf_dir, "events").selectExpr(
         "event_id", "user_id", "event_type",
         "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
@@ -623,7 +614,6 @@ def image_edt(spark, sf_dir):
     with exact Fraction hull intersections (vs the engine's
     nearest-seed scans + vectorized offset broadcast)."""
     from .ops.payload import edt_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -750,7 +740,6 @@ def image_fft_sharpness(spark, sf_dir):
     same in-process rfft2 (the decode_stats precedent — the DECODE
     path is what the comparison exercises)."""
     from .ops.payload import fft_sharpness_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -836,7 +825,6 @@ def roads_topology_errors(spark, sf_dir):
     Plan shape: endpoint side explodes 9 block keys (tiny), segment
     side buckets once; one equi-join, one per-endpoint MAX(flag) agg,
     one kind rollup."""
-    from .queries_ext import _fixture_images
     from .sqlgen import apply_steps, point_seg_dist_steps
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -925,7 +913,6 @@ def tfrecord_roundtrip_docs(spark, sf_dir):
     task, content never shuffles."""
     import os
 
-    from .queries_ext import _stream_base
     from .queries_r5 import _b12_cells
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -1010,7 +997,6 @@ def webdataset_roundtrip_images(spark, sf_dir):
     a sum."""
     import os
 
-    from .queries_ext import _fixture_images, _stream_base
     from .queries_r5 import _b12_cells
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -1243,7 +1229,6 @@ def roads_in_aoi_length(spark, sf_dir):
     micro-degrees BEFORE the fold (FLOOR-before-fold, the
     cells_line_density rule), so sums are exact BIGINTs at any
     partitioning."""
-    from .queries_ext import _fixture_images
 
     lo, hi, feas = _aoi_halfplane_exprs()
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -1292,7 +1277,6 @@ def multimodal_caption_consistency(spark, sf_dir):
     binding (phash, caption) columns, so the oracle reruns it verbatim;
     emits the pairs with their hamming and the agreement flag."""
     from .ops import payload as PL
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     subset = images.filter(F.col("image_id") < "img000000000400")
@@ -1326,7 +1310,6 @@ def image_ssim_recon(spark, sf_dir):
     blocks + np.kron + python-int sums vs strided slices + np.repeat +
     numpy sums)."""
     from .ops.payload import ssim_recon_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -1393,7 +1376,6 @@ def snapshot_constraint_check(spark, sf_dir):
     re-validate.  The query pins the protocol: commit count, rejected
     batch count, and the head read exclude the bad rows by
     construction."""
-    from .queries_ext import _stream_base
     from .storage import read_snapshot, snapshot_history, write_snapshot
 
     docs = _t(spark, sf_dir, "documents").select(

@@ -10,17 +10,13 @@ Registered into queries.QUERIES via QUERIES_R5E.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .qcommon import _t, _drain_confs, _drain_dirs, _fixture_images
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +57,6 @@ def roads_graph_diameter(spark, sf_dir):
     (hops desc, node asc) deterministic.  Oracle: TWO chained
     recursive CTEs over the same quantized graph, identical 32-hop
     bound."""
-    from .queries_ext import _fixture_images
     from .queries_r5 import _BFS_NODE
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -90,7 +85,6 @@ def roads_graph_diameter(spark, sf_dir):
     # fixed cost = partitions x rounds x stages) with codegen OFF for
     # the rounds too (per-round plan churn); r06 review consolidation:
     # one shared scoped helper instead of a hand-rolled save/restore
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark):
         lab1 = _bfs_labels(edges, hub, _DIAM_MAX_HOPS)
@@ -135,7 +129,6 @@ def image_fast_corners(spark, sf_dir):
     AND; golden twin: the SAME codes through a 65536-entry max-run
     LOOKUP TABLE built scalar — two different run detectors."""
     from .ops.payload import fast_corner_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -281,7 +274,6 @@ def image_affine_bilinear(spark, sf_dir):
     expression.  Map-only; out-of-bounds samples are skipped (counted).
     Oracle: committed golden with gather-based mechanics."""
     from .ops.payload import affine_bilinear_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -305,16 +297,11 @@ def streaming_dedup_then_window(spark, sf_dir):
     import shutil
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "dedupwin_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "dedupwin_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "a.parquet"))
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(in_dir, "b.parquet"))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, nodata=False):
         STR.stream_dedup_then_window(spark, in_dir, out, ck)
@@ -339,7 +326,6 @@ def image_hough_lines(spark, sf_dir):
     shuffle).  Oracle: committed golden with np.add.at scatter
     mechanics over clamp-indexed generator pixels."""
     from .ops.payload import hough_lines_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -426,7 +412,6 @@ def roads_strokes(spark, sf_dir):
     Stroke lengths fold FLOOR-micro segment lengths (exact BIGINTs).
     Oracle: identical fragments + the pruned recursive-CTE
     reachability min (the dissolve technique) in DuckDB."""
-    from .queries_ext import _fixture_images
     from .queries_r5 import _components_jump
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -570,7 +555,6 @@ def image_canny_hysteresis(spark, sf_dir):
     connected closure.  Map-only; every output is an exact integer.
     Oracle: committed golden over clamp-indexed generator pixels."""
     from .ops.payload import canny_hysteresis_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(

@@ -9,17 +9,12 @@ Registered into queries.QUERIES via QUERIES_R5F.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .qcommon import _t, _drain_confs, _fixture_images, _stream_base
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -37,7 +32,6 @@ def snapshot_cow_delete(spark, sf_dir):
     rewritten / 2 carried, the pre-delete head still time-travel reads
     all 500 rows, and the post-delete per-lang content aggregate.
     """
-    from .queries_ext import _stream_base
     from .storage import (
         delete_where_cow,
         read_snapshot,
@@ -243,7 +237,6 @@ def image_harris_corners(spark, sf_dir):
     recomputes the SPEC via np.ix_ gathers + summed-area-table box
     sums + scalar NMS (three independent mechanisms)."""
     from .ops.payload import harris_corner_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -457,7 +450,6 @@ def streaming_pysource_windows(spark, sf_dir):
             F.max("cents").alias("max_cents"),
         )
     )
-    from .queries_ext import _drain_confs
 
     with _drain_confs(spark, nodata=False):  # r06: see _drain_confs
         q = (
@@ -564,7 +556,6 @@ def image_skeleton_zs(spark, sf_dir):
     predicate LUTs built with scalar loops (vs the engine's slice
     arithmetic)."""
     from .ops.payload import zhang_suen_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -644,7 +635,6 @@ def image_lbp_texture(spark, sf_dir):
     integer, map-only.  Golden twin packs the same comparisons via
     flat np.take gathers + a scalar-built 256-entry transition LUT."""
     from .ops.payload import lbp_texture_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -663,7 +653,6 @@ def image_canny_nms(spark, sf_dir):
     all-integer.  Golden twin resolves every candidate with a scalar
     loop."""
     from .ops.payload import canny_nms_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -742,7 +731,6 @@ def image_dither_fs(spark, sf_dir):
     scalar 2-D list walk.  A mid-gray field dithers to ~50% on-pixels
     (pinned analytically in pytest)."""
     from .ops.payload import dither_fs_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -807,7 +795,6 @@ def image_dog_blobs(spark, sf_dir):
     Golden twin convolves via flat np.take gathers and resolves every
     candidate with a scalar loop."""
     from .ops.payload import dog_blob_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -892,7 +879,6 @@ def roads_bipartite_check(spark, sf_dir):
     certified frontier loop), then one pass over the edges counts
     same-parity endpoints — each is an odd cycle witness.  Oracle:
     recursive-CTE BFS + identical conflict count."""
-    from .queries_ext import _fixture_images
     from .queries_r5 import _BFS_NODE
     from .queries_r5e import _DIAM_MAX_HOPS, _bfs_labels
 

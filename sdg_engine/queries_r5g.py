@@ -21,17 +21,20 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .qcommon import (
+    _t,
+    _drain_confs,
+    _drain_dirs,
+    _fixture_images,
+    _pin_batch_order,
+    _spread,
+    _stream_base,
+)
 
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -255,8 +258,6 @@ def avro_roundtrip_events(spark, sf_dir):
     shape: one file per task, content never shuffles."""
     import os
 
-    from .queries_ext import _stream_base
-
     schema = {
         "type": "record",
         "name": "Event",
@@ -277,7 +278,6 @@ def avro_roundtrip_events(spark, sf_dir):
     # pickled every Row one at a time across the Python boundary —
     # guide §4.1).  Row content per record is identical; the oracle
     # aggregates are shard-layout-independent.
-    from .queries_ext import _spread
 
     ev = _spread(_t(spark, sf_dir, "events"), "event_id").selectExpr(
         "event_id", "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us",
@@ -487,7 +487,6 @@ def image_haar_energy(spark, sf_dir):
     Map-only behind the decode path; golden twin gathers each 2x2
     block corner with scalar loops (vs the engine's strided slices)."""
     from .ops.payload import haar_energy_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -504,7 +503,6 @@ def image_seam_carve(spark, sf_dir):
     fully scalar DP in the golden, leftmost-argmin ties in both.
     Parallel across images, payload bytes never shuffle."""
     from .ops.payload import seam_carve_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -528,7 +526,6 @@ def polyline_roundtrip_roads(spark, sf_dir):
     sums, net eastward drift) are computed entirely from DECODED
     integers and checked against DuckDB quantizing the source coords
     directly.  Map-only; geometry never shuffles."""
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
 
@@ -616,18 +613,15 @@ def streaming_tws_totals(spark, sf_dir):
     from pyspark.sql import Window
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "tws_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "tws_")
     ev = _t(spark, sf_dir, "events")
     ranked = ev.selectExpr(
         "*", "NTILE(4) OVER (ORDER BY ts, event_id) AS chunk"
     ).persist()
     for k in range(4):
-        tmp = os.path.join(base, f"tmp{k}")
+        tmp = os.path.join(os.path.dirname(in_dir), f"tmp{k}")
         (
             ranked.filter(f"chunk = {k + 1}")
             .drop("chunk")
@@ -638,7 +632,6 @@ def streaming_tws_totals(spark, sf_dir):
         shutil.move(part, os.path.join(in_dir, f"chunk{k}.parquet"))
         shutil.rmtree(tmp)
     ranked.unpersist()
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     old_prov = spark.conf.get(prov_key, None)
@@ -683,7 +676,6 @@ def community_modularity(spark, sf_dir):
     sum runs over the communities relation (small by construction)."""
     from pyspark.sql import Window
 
-    from .queries_ext import _fixture_images
     from .queries_r5 import _BFS_NODE, _LPA_ROUNDS
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
@@ -1128,7 +1120,6 @@ def image_template_match(spark, sf_dir):
     exact int64, map-only; the golden gathers windows with np.take and
     re-resolves the raster-earlier argmin with a scalar loop."""
     from .ops.payload import template_match_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -1150,8 +1141,6 @@ def roads_simplify_vw(spark, sf_dir):
     the kept-vertex BITMASK (n_pts <= 42 fits bigint) like the DP
     twin, so one flipped keep decision fails the hash."""
     import numpy as np
-
-    from .queries_ext import _fixture_images
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
 
@@ -1246,7 +1235,6 @@ def image_palette_mediancut(spark, sf_dir):
     the same SPEC over scalar python dicts (vs the engine's sorted
     numpy distinct-color arrays)."""
     from .ops.payload import palette_mediancut_stats
-    from .queries_ext import _fixture_images
 
     images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     sel = images.filter(
@@ -1269,7 +1257,6 @@ def snapshot_rename_column(spark, sf_dir):
     field-id indirection as a name mapping), and the full read
     aggregates under char_count while the PRE-rename snapshot still
     time-travel-reads as n_chars."""
-    from .queries_ext import _stream_base
     from .storage import (
         _read_manifest,
         read_snapshot,
@@ -1331,12 +1318,9 @@ def streaming_full_outer_join(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from . import streaming as STR
-    from .queries_ext import _stream_base
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    base = _stream_base(spark, "sfj_")
-    in_dir = os.path.join(base, "in")
-    os.makedirs(in_dir)
+    in_dir, out, ck = _drain_dirs(spark, "sfj_")
     t = pq.read_table(f"{sf_dir}/events.parquet")
     t = t.filter(
         pa.compute.less(t["ts"], pa.scalar(_dt.datetime(2024, 1, 11)))
@@ -1349,28 +1333,19 @@ def streaming_full_outer_join(spark, sf_dir):
     # ts) and the two trailing fillers still drive the post-jump
     # evictions (16a), so the extra chunk boundaries only re-paid
     # per-batch fixed cost (~1-1.5 s each).  Parity PASS sf0.01+sf0.1.
+    chunks = []
     for k in range(2):
+        chunks.append(os.path.join(in_dir, f"chunk-{k:02d}.parquet"))
         pq.write_table(
-            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2),
-            os.path.join(in_dir, f"chunk-{k:02d}.parquet"),
+            t.slice(k * n // 2, (k + 1) * n // 2 - k * n // 2), chunks[-1]
         )
     filler = t.filter(pa.compute.equal(t["event_type"], "signup")).slice(0, 4)
     for k in range(2):
-        pq.write_table(
-            filler, os.path.join(in_dir, f"chunk-9{k}-filler.parquet")
-        )
-    # r06 review fix: FileStreamSource orders pending files by mtime
-    # ONLY (ms resolution, no path tie-break) — tiny sequential writes
-    # on tmpfs can tie, and the chronological-chunk -> monotone-
-    # watermark contract needs a deterministic order.  Pin strictly
-    # increasing whole-second mtimes explicitly.
-    import time as _time
-
-    _t0 = _time.time()
-    for _i, _f in enumerate(sorted(os.listdir(in_dir))):
-        os.utime(os.path.join(in_dir, _f), (_t0 + _i, _t0 + _i))
-    out, ck = os.path.join(base, "out"), os.path.join(base, "ck")
-    from .queries_ext import _drain_confs
+        chunks.append(os.path.join(in_dir, f"chunk-9{k}-filler.parquet"))
+        pq.write_table(filler, chunks[-1])
+    # the chronological-chunk -> monotone-watermark contract needs the
+    # drain's batches in write order
+    _pin_batch_order(chunks)
 
     with _drain_confs(spark, nodata=False):
         STR.stream_interval_join_full(spark, in_dir, out, ck,
@@ -1423,7 +1398,6 @@ def doc_char_lm_score(spark, sf_dir):
     # r06: _spread — the char-grain explode + (doc, xy) partial
     # aggregate is the query's hot stage and otherwise runs in the
     # corpus scan's single task (guide §2.5; no-op on a wide scan)
-    from .queries_ext import _spread
 
     docs = _spread(
         _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -1537,7 +1511,6 @@ def doc_ngram_novelty(spark, sf_dir):
     Per-lang rollup: mean novelty in ppm + the least-novel doc."""
     # r06: _spread — shingle explode + per-doc partial agg otherwise
     # runs inside the single-split scan task (guide §2.5)
-    from .queries_ext import _spread
 
     docs = _spread(
         _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")

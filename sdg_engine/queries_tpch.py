@@ -40,14 +40,10 @@ Registered into queries.QUERIES via QUERIES_TPCH.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .tablecache import read_table
-
-    return read_table(spark, f"{sf_dir}/{name}.parquet")
+from .qcommon import _t
 
 
 # Exact-integer money fragments — the SINGLE source of truth shared by

@@ -74,21 +74,28 @@ ENGINE_CONFS = {
 # 6.1 s → 3.0 s for a 32-task first Arrow stage on the r06 host).
 # executorEnv extends the daemon subprocess's PYTHONPATH so the
 # preload module resolves (same machine in local mode by definition).
+# Kept OUT of ENGINE_CONFS: engine_confs() merges it for local masters only.
 LOCAL_ENGINE_CONFS = {
     "spark.python.daemon.module": "sdg_engine.spark_daemon",
     "spark.executorEnv.PYTHONPATH": _PKG_ROOT
     + ((os.pathsep + os.environ["PYTHONPATH"])
        if os.environ.get("PYTHONPATH") else ""),
 }
-ENGINE_CONFS.update(LOCAL_ENGINE_CONFS)  # scripts build local sessions
+
+
+def engine_confs(master: str) -> dict:
+    """Session confs for ``master``: ENGINE_CONFS, plus the local-only
+    daemon confs when the master is local (never point a remote
+    executor at a driver path)."""
+    if master.startswith("local"):
+        return {**ENGINE_CONFS, **LOCAL_ENGINE_CONFS}
+    return dict(ENGINE_CONFS)
 
 
 def get_spark(app: str = "sdg_engine", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app).master(m)
-    for k, v in ENGINE_CONFS.items():
-        if not m.startswith("local") and k in LOCAL_ENGINE_CONFS:
-            continue  # never point a remote executor at a driver path
+    for k, v in engine_confs(m).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

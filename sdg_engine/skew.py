@@ -61,10 +61,3 @@ def with_salt(
             F.pmod(F.xxhash64(F.col(id_col)), F.col("n_salt")).cast("int"),
         ).otherwise(F.lit(0)),
     ).drop("n_salt")
-
-
-def repartition_by_cell_range(df: DataFrame, n: int, cell_col: str = "cell_id") -> DataFrame:
-    """Range-partitioned shuffle on the Z-order cell key — spatially
-    coherent partitions (neighbors land together), the layout the
-    images table would be written with on Iceberg (SURVEY.md §4)."""
-    return df.repartitionByRange(n, F.col(cell_col))

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from .wire import read_varint, varint
+
 _CRC_TABLE = []
 for _i in range(256):
     _c = _i
@@ -43,21 +45,9 @@ def masked_crc(data: bytes) -> int:
     return (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _ld(tag_byte: int, payload: bytes) -> bytes:
     """One length-delimited field: tag + varint(len) + payload."""
-    return bytes([tag_byte]) + _varint(len(payload)) + payload
+    return bytes([tag_byte]) + varint(len(payload)) + payload
 
 
 def encode_example(feats: dict) -> bytes:
@@ -70,7 +60,7 @@ def encode_example(feats: dict) -> bytes:
         else:
             vals = v if isinstance(v, list) else [int(v)]
             packed = b"".join(
-                _varint(x & 0xFFFFFFFFFFFFFFFF) for x in vals
+                varint(x) for x in vals
             )
             feature = _ld(0x1A, _ld(0x0A, packed))  # int64_list.value
         entry = _ld(0x0A, name.encode("utf-8")) + _ld(0x12, feature)
@@ -78,21 +68,10 @@ def encode_example(feats: dict) -> bytes:
     return _ld(0x0A, entries)  # Example.features
 
 
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    n = shift = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-
-
 def _expect(data: bytes, pos: int, tag: int) -> tuple[int, int]:
     if data[pos] != tag:
         raise ValueError(f"unexpected tag {data[pos]:#x} (want {tag:#x})")
-    return _read_varint(data, pos + 1)
+    return read_varint(data, pos + 1)
 
 
 def decode_example(data: bytes) -> dict:
@@ -108,8 +87,8 @@ def decode_example(data: bytes) -> dict:
         pos += klen
         flen, pos = _expect(data, pos, 0x12)
         ftag = data[pos]
-        plen, pos = _read_varint(data, pos + 1)
-        vlen, pos = _read_varint(data, pos + 1)
+        plen, pos = read_varint(data, pos + 1)
+        vlen, pos = read_varint(data, pos + 1)
         if ftag == 0x0A:  # bytes_list: single value supported
             out[key] = data[pos:pos + vlen]
             pos += vlen
@@ -117,7 +96,7 @@ def decode_example(data: bytes) -> dict:
             vals = []
             vend = pos + vlen
             while pos < vend:
-                v, pos = _read_varint(data, pos)
+                v, pos = read_varint(data, pos)
                 if v >= 1 << 63:
                     v -= 1 << 64
                 vals.append(v)

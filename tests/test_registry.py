@@ -1,0 +1,31 @@
+"""Registry invariants: the query set and its oracle set are pinned, so
+moving builders between modules cannot silently drop a query or an
+oracle."""
+
+import importlib
+import pkgutil
+
+import sdg_engine
+
+
+def test_registry_size_and_oracle_coverage():
+    from sdg_engine.oracles import all_oracles
+    from sdg_engine.queries import QUERIES
+
+    assert len(QUERIES) == 347
+    assert set(QUERIES) == set(all_oracles())
+
+
+def test_query_modules_share_one_plumbing_module():
+    """Every query module uses qcommon's helpers, never a copy."""
+    from sdg_engine import qcommon
+
+    mods = [m.name for m in pkgutil.iter_modules(sdg_engine.__path__)
+            if m.name.startswith("queries")]
+    assert "queries" in mods
+    for name in mods:
+        mod = importlib.import_module(f"sdg_engine.{name}")
+        for helper in ("_t", "_drain_confs", "_fixture_images", "_spread",
+                       "_stream_base", "_drain_dirs", "_pin_batch_order"):
+            if hasattr(mod, helper):
+                assert getattr(mod, helper) is getattr(qcommon, helper), (name, helper)
