@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 
 from .qcommon import (
     _t,
-    _drain_confs,
     _drain_dirs,
     _fixture_images,
     _spread,
     _stream_base,
 )
+from .graph import connected_components
 
 
 # ---------------------------------------------------------------------------
@@ -637,74 +637,9 @@ def ngram_jaccard_indexed(spark, sf_dir, max_shingle_freq: int = 10,
     return scored.filter(F.col("jaccard") >= min_jaccard)
 
 
-def connected_components(edges, vertices, id_col: str = "doc_id",
-                         max_iter: int = 20):
-    """Iterative min-label propagation (the dedup-cluster primitive):
-    label(v) converges to min(id) of v's connected component.
-
-    Per round: one groupBy over the (undirected) edge-label join, one
-    join back, persist, driver-side convergence check on the count of
-    changed labels — the same persisted-frontier discipline as
-    knn_ring_iterative.  Rounds needed = graph diameter (near-dup
-    clusters are shallow); at 10^12 rows this is the standard
-    large/small-star shape with labels never wider than the vertex set.
-    """
-    # localCheckpoint is LOAD-BEARING and persist() is NOT a substitute:
-    # persist caches data but leaves the LOGICAL plan intact, so round
-    # k's analyzed plan still embeds every earlier round plus the whole
-    # upstream (e.g. the LSH candidate pipeline) — Spark's SQL-listener
-    # explainString then renders a combinatorially growing plan string
-    # and OOMs the driver (measured stack: StringConcat.append inside
-    # QueryExecution.explainString).  localCheckpoint truncates the
-    # plan to a LogicalRDD leaf, keeping every round O(1).  The
-    # checkpointed label frames are tiny (one row per vertex).
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = vertices.select(
-        F.col(id_col).alias("v"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    # r06: the rounds run under _drain_confs (8 shuffle partitions +
-    # whole-stage codegen OFF, restored after) — per-round plan churn
-    # over the label relation means janino compile dominates these
-    # tiny jobs (the _components_jump / mst_roads measurement)
-    spark_ = edges.sparkSession
-    converged = False
-    with _drain_confs(spark_):
-        for _ in range(max_iter):
-            nbr_min = (
-                und.join(labels, und.src == labels.v)
-                .groupBy("dst").agg(F.min("label").alias("nbr_label"))
-            )
-            new = (
-                labels.join(nbr_min, labels.v == nbr_min.dst, "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                    (F.col("nbr_label") < F.col("label")).alias("_chg"),
-                )
-                .localCheckpoint()
-            )
-            converged = new.filter(F.col("_chg")).isEmpty()
-            labels = new.drop("_chg")
-            if converged:
-                break
-    if not converged:
-        # r03 review: silently returning unconverged labels diverges
-        # from the fully-converged recursive-CTE oracle with no hint —
-        # a >max_iter-diameter component must fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(component diameter exceeds max_iter — raise max_iter)"
-        )
-    return labels
-
-
 def dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: MinHash-LSH candidate pairs → connected
-    components (iterative min-label propagation) → one row per
+    components (pointer-jumped min-label) → one row per
     multi-doc cluster with its canonical keeper (min doc_id) and size.
     Oracle: DuckDB recursive CTE propagating labels over the same
     edge set."""

@@ -27,6 +27,18 @@ from .qcommon import (
     _spread,
     _stream_base,
 )
+from .graph import (
+    _BFS_NODE,
+    _LPA_ROUNDS,  # noqa: F401 — the LPA oracle reads it from this module
+    _PR_NODE_A,
+    _PR_NODE_B,
+    _components_jump,
+    _spw_edges,
+    bfs_hops,
+    hubs,
+    label_propagation,
+    road_edges,
+)
 
 
 # events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to
@@ -261,10 +273,6 @@ def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     Parallel edges carry weight w; self-loops are legal (a node keeps
     feeding itself) which removes the dangling-node special case.
     """
-    # r06: rounds under _drain_confs (8 partitions + codegen off,
-    # restored) — per-round plan churn over the rank relation, same
-    # measurement as _components_jump
-
     with _drain_confs(edges.sparkSession):
         ew = edges.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
         deg = ew.groupBy("src").agg(F.sum("w").alias("outdeg"))
@@ -301,20 +309,6 @@ def pagerank(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     return pr
 
 
-# Road graph: segment endpoints quantized to integer-degree cells
-# (FLOOR(x + 0.5) — round-half-up in BOTH engines; CAST would round in
-# DuckDB but truncate in Spark, gotcha 7).  Undirected -> both edge
-# directions.  Node id = (cx + 100) * 1000 + (cy + 100) stays positive.
-_PR_NODE_A = (
-    "(CAST(FLOOR(ax + 0.5) AS BIGINT) + 100) * 1000 "
-    "+ (CAST(FLOOR(ay + 0.5) AS BIGINT) + 100)"
-)
-_PR_NODE_B = (
-    "(CAST(FLOOR(bx + 0.5) AS BIGINT) + 100) * 1000 "
-    "+ (CAST(FLOOR(byy + 0.5) AS BIGINT) + 100)"
-)
-
-
 def pagerank_roads(spark, sf_dir):
     """PageRank centrality of road-graph cells: road segments quantized
     to integer-degree cells, one undirected edge per segment, 3
@@ -328,14 +322,6 @@ def pagerank_roads(spark, sf_dir):
         segs.selectExpr("b AS src", "a AS dst")
     )
     return pagerank(edges).select("node", "pr")
-
-
-# node id of a polyline vertex at 0.1-degree cells — shared fragment
-# with the DuckDB oracle (FLOOR(x*10+0.5): round-half-up both engines)
-_BFS_NODE = (
-    "(CAST(FLOOR({x} * 10 + 0.5) AS BIGINT) + 100) * 1000 "
-    "+ (CAST(FLOOR({y} * 10 + 0.5) AS BIGINT) + 100)"
-)
 
 
 def road_graph_bfs(spark, sf_dir):
@@ -353,47 +339,9 @@ def road_graph_bfs(spark, sf_dir):
     """
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))  # self-loops add no hops
-        .distinct()
-        .localCheckpoint()
-    )
-    # seed at the max-degree hub (tie-break min id) so the walk explores
-    # a real component, not a 2-node fragment of the quantized grid
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seed = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"), F.lit(0).cast("int").alias("hops"))
-    )
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
-    with _drain_confs(spark):
-        visited = seed.localCheckpoint()
-        frontier = visited
-        for hop in range(1, 17):  # matches the oracle CTE's hop bound
-            nxt = (
-                frontier.join(edges, frontier.node == edges.src)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(hop).cast("int"))
-                .localCheckpoint()
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint()
-            frontier = nxt
+    edges = road_edges(roads).localCheckpoint()
+    # 16 hops matches the oracle CTE's hop bound
+    visited = bfs_hops(edges, hubs(edges), 16)
     return visited.groupBy("hops").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("node").alias("sum_node"),
@@ -1831,21 +1779,8 @@ def triangle_count_roads(spark, sf_dir):
     """
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    und = (
-        segs.selectExpr(
-            "least(a, b) AS u", "greatest(a, b) AS v"
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # referenced by deg + both orientation sides
-    )
+    # referenced by deg + both orientation sides
+    und = road_edges(roads, undirected=True).localCheckpoint()
     deg = (
         und.selectExpr("u AS nd").unionAll(und.selectExpr("v AS nd"))
         .groupBy("nd")
@@ -2083,36 +2018,6 @@ def route_interpolate(spark, sf_dir):
 _SPW_ROUNDS = 12
 
 
-def _spw_edges(spark, sf_dir):
-    """Weighted road-graph edges: the BFS cell quantization plus an
-    integer Euclidean weight in cell-mils between cell centers
-    (FLOOR(sqrt*1000) of integer deltas — deterministic)."""
-
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    w = (
-        "CAST(FLOOR(SQRT(CAST((FLOOR(u / 1000) - FLOOR(v / 1000)) "
-        "* (FLOOR(u / 1000) - FLOOR(v / 1000)) "
-        "+ (u % 1000 - v % 1000) * (u % 1000 - v % 1000) AS DOUBLE)) "
-        "* 1000) AS BIGINT)"
-    )
-    wed = und.selectExpr("u", "v", f"{w} AS w")
-    return wed.selectExpr("u AS src", "v AS dst", "w").unionAll(
-        wed.selectExpr("v AS src", "u AS dst", "w")
-    )
-
-
 def shortest_path_weighted(spark, sf_dir):
     """WEIGHTED single-source shortest paths (Bellman-Ford rounds) over
     the road graph — BFS's hop labels generalized to integer edge
@@ -2125,15 +2030,7 @@ def shortest_path_weighted(spark, sf_dir):
     Output: distance-band histogram + node-id checksums.
     """
     edges = _spw_edges(spark, sf_dir).localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seed = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"), F.lit(0).cast("long").alias("d"))
-    )
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
+    seed = hubs(edges).select("node", F.lit(0).cast("long").alias("d"))
     with _drain_confs(spark):
         dist = seed.localCheckpoint()
         for _ in range(_SPW_ROUNDS):
@@ -2822,21 +2719,8 @@ def link_prediction_roads(spark, sf_dir):
     """
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # deg + wedge sides + anti-join probe
-    )
+    # deg + wedge sides + anti-join probe
+    und = road_edges(roads, undirected=True).localCheckpoint()
     deg = (
         und.selectExpr("u AS nd")
         .unionAll(und.selectExpr("v AS nd"))
@@ -2873,92 +2757,6 @@ _DB_N = 128  # level-7 grid over the 0..10 world
 _DB_MINPTS = 25
 _DB_IX = "CAST(LEAST(GREATEST(FLOOR(x / 10.0 * 128), 0), 127) AS BIGINT)"
 _DB_IY = "CAST(LEAST(GREATEST(FLOOR(y / 10.0 * 128), 0), 127) AS BIGINT)"
-
-
-def _components_jump(edges, verts_k, max_iter: int = 12,
-                     n_parts: int = 8):
-    """Min-label connected components WITH POINTER JUMPING:
-    label ← min(label, min-neighbor-label), then label ← label(label).
-    The jump halves the remaining label-tree depth each round, so
-    convergence is O(log diameter) instead of O(diameter) — road
-    corridors form chain-shaped components whose diameter would cost
-    one join round per cell under plain propagation
-    (connected_components), but 12 jump rounds cover diameter 2^12.
-    Same persisted-frontier discipline (gotcha 15); converge-or-raise
-    like the plain variant.
-
-    The loop runs at ``n_parts`` shuffle partitions (saved/restored):
-    the label table is CELLS, orders of magnitude smaller than the
-    vertex input, and the iterative fixed cost is partitions × rounds
-    × stages (the gotcha-16d shape — measured 6.9 s -> 3.6 s at sf0.1
-    with 8 vs the session's 32).  At real scale size n_parts to the
-    core-cell count, not the fact-table width.
-    """
-    spark = edges.sparkSession
-    # r06 (review consolidation): one shared scoped-conf helper —
-    # shuffle partitions down to n_parts AND whole-stage codegen OFF
-    # for the loop: every round plans fresh tiny jobs over the label
-    # relation, so janino compile time dominates and never amortizes —
-    # measured 17.9 s -> 6.6 s first-invocation on mst_roads (which
-    # nests this per Boruvka round), warm 7.1 -> 6.0.  The label
-    # relation is the SMALL side by construction (cells / component
-    # ids), so interpreted row processing is the right trade at any
-    # scale; fact-table stages elsewhere keep codegen.
-
-    with _drain_confs(spark, parts=str(n_parts)):
-        return _components_jump_inner(edges, verts_k, max_iter)
-
-
-def _components_jump_inner(edges, verts_k, max_iter: int):
-    # r06 job-count reduction (these iterative loops are pure
-    # fixed-cost: ~20 ms stages, so ACTIONS per round dominate —
-    # measured via event-log stage attribution on mst_roads):
-    #  * step and jump fold into ONE localCheckpoint per round — the
-    #    step side is referenced twice by the jump self-join and is
-    #    recomputed inside that single job (two parallel branches off
-    #    the checkpointed labels) instead of paying a second
-    #    materialization action;
-    #  * the convergence probe rides ON the checkpointed frame as a
-    #    `changed` flag, so the old join-against-previous-labels job
-    #    becomes a filter+isEmpty scan of already-local blocks.
-    # Labels produced are identical (LEAST chain unchanged).
-    und = edges.unionByName(
-        edges.selectExpr("dst AS src", "src AS dst")
-    ).localCheckpoint()
-    labels = verts_k.selectExpr("k AS v", "k AS label").localCheckpoint()
-    for _ in range(max_iter):
-        nbr = (
-            und.join(labels, und.src == labels.v)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nl"))
-        )
-        stepped = (
-            labels.join(nbr, labels.v == nbr.dst, "left")
-            .selectExpr(
-                "v",
-                "label AS old",
-                "LEAST(label, COALESCE(nl, label)) AS label",
-            )
-        )
-        j = stepped.selectExpr("v AS lv", "label AS l2")
-        jumped = (
-            stepped.join(j, stepped.label == j.lv)
-            .selectExpr(
-                "v",
-                "LEAST(label, l2) AS label",
-                "LEAST(label, l2) < old AS changed",
-            )
-            .localCheckpoint()
-        )
-        done = jumped.filter("changed").isEmpty()
-        labels = jumped.select("v", "label")
-        if done:
-            break
-    else:
-        raise RuntimeError(
-            f"_components_jump did not converge in {max_iter} rounds"
-        )
-    return labels
 
 
 def spatial_dbscan(spark, sf_dir):
@@ -3234,9 +3032,6 @@ def doc_word_diversity(spark, sf_dir):
     )
 
 
-_LPA_ROUNDS = 4
-
-
 def label_propagation_roads(spark, sf_dir):
     """COMMUNITY DETECTION via label propagation on the road graph
     (same 0.1° quantization as road_graph_bfs): FIXED 4 synchronous
@@ -3256,41 +3051,11 @@ def label_propagation_roads(spark, sf_dir):
     """
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    und = road_edges(roads, undirected=True)
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
         und.selectExpr("v AS src", "u AS dst")
     ).localCheckpoint()  # probed every round
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
-    with _drain_confs(spark):
-        labels = dirs.selectExpr("src AS v", "src AS label").distinct()
-        pick = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
-        for _ in range(_LPA_ROUNDS):
-            cnt = (
-                dirs.join(labels, dirs.src == labels.v)
-                .groupBy("dst", "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            labels = (
-                cnt.withColumn("rn", F.row_number().over(pick))
-                .filter("rn = 1")
-                .selectExpr("dst AS v", "label")
-                .localCheckpoint()
-            )
+    labels = label_propagation(dirs)
     return labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("v").alias("checksum"),
@@ -3735,23 +3500,7 @@ def kcore_roads(spark, sf_dir):
     """
 
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    sym = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # r06: peel rounds under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
+    sym = road_edges(roads).localCheckpoint()
     with _drain_confs(spark):
         for _ in range(_KCORE_ROUNDS):
             sym = (

@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .qcommon import _t, _drain_confs, _fixture_images
+from .graph import _PR_NODE_A, _PR_NODE_B, bfs_hops, hubs, road_edges
 
 
 _ORDER_CENTS = "CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)"
@@ -162,7 +163,7 @@ def zipf_word_slope(spark, sf_dir):
 
 
 # Directed road-graph edges: same quantized endpoints as
-# pagerank_roads (queries_r5._PR_NODE_A/B), but KEPT DIRECTED (a→b as
+# pagerank_roads (graph._PR_NODE_A/B), but KEPT DIRECTED (a→b as
 # drawn) so hub and authority scores genuinely differ (symmetrizing
 # would make them equal by construction).
 _HITS_ITERS = 3
@@ -180,7 +181,6 @@ def hits_roads(spark, sf_dir):
     CTE chain (each round references only the previous one — the
     shortest_path_weighted lesson)."""
     from .harness import segments_df
-    from .queries_r5 import _PR_NODE_A, _PR_NODE_B
 
     segs = segments_df(spark, sf_dir).withColumnRenamed("by", "byy")
     edges = (
@@ -196,9 +196,6 @@ def hits_roads(spark, sf_dir):
         .distinct()
         .localCheckpoint()
     )
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
     with _drain_confs(spark):
         hub = nodes.select("node", F.lit(1).cast("bigint").alias("h"))
         for _ in range(_HITS_ITERS):
@@ -458,9 +455,6 @@ def pca_power_iteration(spark, sf_dir):
         )
         .localCheckpoint()  # referenced every round
     )
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
     with _drain_confs(spark):
         v = cov.select("j").distinct().selectExpr(
             "j", "CAST(1000000 AS BIGINT) AS v"
@@ -564,50 +558,11 @@ def closeness_roads(spark, sf_dir):
     (reached - 1) / sum(hops) in FLOOR micros.  Oracle: DuckDB
     recursive CTE over (seed, node) pairs with MIN(hops) dedup — the
     road_graph_bfs twin generalized to a labeled walk."""
-    from .queries_r5 import _BFS_NODE
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(5)
-        .selectExpr("src AS seed", "src AS node",
-                    "CAST(0 AS INT) AS hops")
-    )
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
-    with _drain_confs(spark):
-        visited = seeds.localCheckpoint()
-        frontier = visited
-        for hop in range(1, 17):  # same hop bound as road_graph_bfs
-            nxt = (
-                frontier.join(edges, frontier.node == edges.src)
-                .select("seed", F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("seed", "node"), ["seed", "node"],
-                      "left_anti")
-                .withColumn("hops", F.lit(hop).cast("int"))
-                .localCheckpoint()
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).localCheckpoint()
-            frontier = nxt
+    edges = road_edges(roads).localCheckpoint()
+    seeds = hubs(edges, 5).selectExpr("node AS seed", "node")
+    # same hop bound as road_graph_bfs
+    visited = bfs_hops(edges, seeds, 16, key="seed")
     return visited.groupBy("seed").agg(
         F.expr("CAST(COUNT(*) - 1 AS BIGINT) AS n_reached"),
         F.expr("CAST(SUM(hops) AS BIGINT) AS sum_hops"),

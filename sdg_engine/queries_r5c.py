@@ -26,6 +26,7 @@ from .qcommon import (
     _fixture_images,
     _pin_batch_order,
 )
+from .graph import hubs, road_edges
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOUR_US = 3_600_000_000
@@ -585,33 +586,9 @@ def betweenness_roads(spark, sf_dir):
     Oracle: the identical recurrence as a generated linear CTE chain
     (single back-reference per round, MATERIALIZED multi-referenced
     bases — the label_propagation/shortest_path pattern)."""
-    from .queries_r5 import _BFS_NODE
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(_BC_SEEDS)
-        .selectExpr("src AS seed")
-    )
-    # r06: both sweep loops under _drain_confs (codegen off + 8
-    # partitions, restored) — per-round plan churn over layer-sized
-    # relations, the _components_jump lesson
-
+    edges = road_edges(roads).localCheckpoint()
+    seeds = hubs(edges, _BC_SEEDS).selectExpr("node AS seed")
     with _drain_confs(spark):
         layer = seeds.selectExpr(
             "seed", "seed AS node", "CAST(1 AS BIGINT) AS sigma"
@@ -947,9 +924,6 @@ def events_markov_stationary(spark, sf_dir):
     )
     rowsum = trans.groupBy("t").agg(F.sum("c").alias("r"))
     tm = trans.join(rowsum, "t").localCheckpoint()
-    # r06: loop under _drain_confs (codegen off + 8 partitions,
-    # restored) — per-round plan churn, the _components_jump lesson
-
     with _drain_confs(spark):
         pi = rowsum.selectExpr(
             "t AS s", "CAST(1000000 DIV 5 AS BIGINT) AS pi"

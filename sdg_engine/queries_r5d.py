@@ -26,6 +26,7 @@ from .qcommon import (
     _fixture_images,
     _stream_base,
 )
+from .graph import _components_jump, _spw_edges
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOLD_US = 1_800_000_000  # 30-minute hold per event
@@ -291,8 +292,6 @@ def mst_roads(spark, sf_dir):
     union-find over the same edges (scripts/make_goldens.py) — plus a
     LIVE relational node count over the roads parquet (load-bearing).
     """
-    from .queries_r5 import _components_jump, _spw_edges
-
     edges_sym = _spw_edges(spark, sf_dir)
     eu = (
         edges_sym.filter("src < dst")
@@ -301,23 +300,18 @@ def mst_roads(spark, sf_dir):
     )
     nodes = eu.selectExpr("u AS k").union(eu.selectExpr("v")).distinct()
     labels = nodes.selectExpr("k AS node", "k AS label").localCheckpoint()
-    spark_ = eu.sparkSession
-    # r06: 8 shuffle partitions + codegen OFF for the loop (see
-    # _components_jump: per-round plan churn over component-sized
-    # relations means compile time dominates) — via the shared
-    # _drain_confs scope (review consolidation; nested _components_
-    # jump calls re-enter it safely, restoring to THIS scope's confs).
-    # r06 job-count reduction (the loop is fixed-cost-bound: ~20 ms
-    # stages — see _components_jump_inner): the forest's THREE output
-    # aggregates (edge count, Σw, Σ(u·1000003+v)) are associative, so
-    # each round folds its chosen-edge aggregate into driver-side ints
-    # with ONE tiny job instead of materializing a growing
-    # union-localCheckpoint chain of edge frames (2 actions/round +
-    # a final scan, and the chain itself re-uploaded per round).
+    # The Boruvka rounds run under the graph module's loop scope (nested
+    # _components_jump calls re-enter it and restore to THIS scope's
+    # confs).  The loop is fixed-cost-bound (~20 ms stages) and the
+    # forest's THREE output aggregates (edge count, Σw, Σ(u·1000003+v))
+    # are associative, so each round folds its chosen-edge aggregate
+    # into Python ints with ONE tiny job instead of materializing a
+    # growing union-localCheckpoint chain of edge frames (2 actions per
+    # round + a final scan, and the chain itself re-uploaded per round).
     # The selected edges per round and hence the sums are unchanged.
 
     n_mst = tot_w = chk = 0
-    with _drain_confs(spark_):
+    with _drain_confs(spark):
         for _ in range(12):
             act = (
                 eu.join(labels.selectExpr("node AS u", "label AS lu"), "u")

@@ -14,6 +14,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .qcommon import _t, _drain_confs, _drain_dirs, _fixture_images
+from .graph import (
+    _DIAM_MAX_HOPS,
+    _components_jump,
+    bfs_hops,
+    hubs,
+    road_edges,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
@@ -22,31 +29,6 @@ _DAY_US = 86_400_000_000
 # ---------------------------------------------------------------------------
 # Double-sweep diameter estimate
 # ---------------------------------------------------------------------------
-
-_DIAM_MAX_HOPS = 32  # shared bound — mirrored in the oracle CTEs
-
-
-def _bfs_labels(edges, seed, max_hops: int):
-    """Hop labels from ``seed`` (node DataFrame) — the road_graph_bfs
-    frontier loop, factored for reuse: per round one equi-join +
-    distinct + anti-join, localCheckpointed (gotcha 15)."""
-    visited = seed.selectExpr("node", "CAST(0 AS INT) AS hops") \
-        .localCheckpoint()
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .selectExpr("dst AS node", f"CAST({hop} AS INT) AS hops")
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return visited
-
 
 def roads_graph_diameter(spark, sf_dir):
     """DOUBLE-SWEEP DIAMETER estimate of the road graph — the classic
@@ -57,46 +39,13 @@ def roads_graph_diameter(spark, sf_dir):
     (hops desc, node asc) deterministic.  Oracle: TWO chained
     recursive CTEs over the same quantized graph, identical 32-hop
     bound."""
-    from .queries_r5 import _BFS_NODE
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    hub = (
-        deg.orderBy(F.col("deg").desc(), F.col("src").asc())
-        .limit(1)
-        .selectExpr("src AS node")
-    )
-    # the frontier tables are graph-sized, not corpus-sized — run the
-    # ~2x32 tiny rounds at 8 shuffle partitions (gotcha 16d: iterative
-    # fixed cost = partitions x rounds x stages) with codegen OFF for
-    # the rounds too (per-round plan churn); r06 review consolidation:
-    # one shared scoped helper instead of a hand-rolled save/restore
-
-    with _drain_confs(spark):
-        lab1 = _bfs_labels(edges, hub, _DIAM_MAX_HOPS)
-        far1 = (
-            lab1.orderBy(F.col("hops").desc(), F.col("node").asc())
-            .limit(1)
-        )
-        lab2 = _bfs_labels(edges, far1.select("node"), _DIAM_MAX_HOPS)
-        far2 = (
-            lab2.orderBy(F.col("hops").desc(), F.col("node").asc())
-            .limit(1)
-        )
+    edges = road_edges(roads).localCheckpoint()
+    hub = hubs(edges)
+    lab1 = bfs_hops(edges, hub, _DIAM_MAX_HOPS)
+    far1 = lab1.orderBy(F.col("hops").desc(), F.col("node").asc()).limit(1)
+    lab2 = bfs_hops(edges, far1.select("node"), _DIAM_MAX_HOPS)
+    far2 = lab2.orderBy(F.col("hops").desc(), F.col("node").asc()).limit(1)
     return (
         hub.selectExpr("node AS hub")
         .crossJoin(far1.selectExpr("node AS u", "hops AS ecc_hub"))
@@ -412,8 +361,6 @@ def roads_strokes(spark, sf_dir):
     Stroke lengths fold FLOOR-micro segment lengths (exact BIGINTs).
     Oracle: identical fragments + the pruned recursive-CTE
     reachability min (the dissolve technique) in DuckDB."""
-    from .queries_r5 import _components_jump
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
     segs = (
         roads.selectExpr(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .qcommon import _t, _drain_confs, _fixture_images, _stream_base
+from .graph import _DIAM_MAX_HOPS, bfs_hops, hubs, road_edges
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
@@ -879,28 +880,9 @@ def roads_bipartite_check(spark, sf_dir):
     certified frontier loop), then one pass over the edges counts
     same-parity endpoints — each is an odd cycle witness.  Oracle:
     recursive-CTE BFS + identical conflict count."""
-    from .queries_r5 import _BFS_NODE
-    from .queries_r5e import _DIAM_MAX_HOPS, _bfs_labels
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = roads.selectExpr(
-        f"transform(coords, c -> {node}) AS nds"
-    ).selectExpr(
-        "explode(transform(sequence(1, size(nds) - 1), "
-        "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-    ).select("e.a", "e.b")
-    edges = (
-        segs.selectExpr("a AS src", "b AS dst")
-        .unionAll(segs.selectExpr("b AS src", "a AS dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    hub = deg.orderBy(F.col("deg").desc(), F.col("src").asc()).limit(1) \
-        .selectExpr("src AS node")
-    visited = _bfs_labels(edges, hub, _DIAM_MAX_HOPS).localCheckpoint()
+    edges = road_edges(roads).localCheckpoint()
+    visited = bfs_hops(edges, hubs(edges), _DIAM_MAX_HOPS).localCheckpoint()
     lab = visited.selectExpr("node", "hops % 2 AS par")
     conf = (
         edges.filter("src < dst")

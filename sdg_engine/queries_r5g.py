@@ -32,6 +32,7 @@ from .qcommon import (
     _spread,
     _stream_base,
 )
+from .graph import label_propagation, road_edges
 
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
@@ -674,43 +675,13 @@ def community_modularity(spark, sf_dir):
     ppm; negative-numerator DIV truncation differs across engines, so
     the division runs in DOUBLE, gotcha-7 discipline).  The Q window
     sum runs over the communities relation (small by construction)."""
-    from pyspark.sql import Window
-
-    from .queries_r5 import _BFS_NODE, _LPA_ROUNDS
-
     _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    node = _BFS_NODE.format(x="c.x", y="c.y")
-    segs = (
-        roads.selectExpr(f"transform(coords, c -> {node}) AS nds")
-        .selectExpr(
-            "explode(transform(sequence(1, size(nds) - 1), "
-            "i -> struct(nds[i - 1] AS a, nds[i] AS b))) AS e"
-        )
-        .select("e.a", "e.b")
-    )
-    und = (
-        segs.selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # probed by LP rounds AND the intra-edge pass
-    )
+    # probed by LP rounds AND the intra-edge pass
+    und = road_edges(roads, undirected=True).localCheckpoint()
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
         und.selectExpr("v AS src", "u AS dst")
     ).localCheckpoint()
-    labels = dirs.selectExpr("src AS v", "src AS label").distinct()
-    pick = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(_LPA_ROUNDS):
-        cnt = (
-            dirs.join(labels, dirs.src == labels.v)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        labels = (
-            cnt.withColumn("rn", F.row_number().over(pick))
-            .filter("rn = 1")
-            .selectExpr("dst AS v", "label")
-            .localCheckpoint()
-        )
+    labels = label_propagation(dirs)
     m_df = und.agg(F.count(F.lit(1)).alias("m"))
     deg = dirs.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     lab_u = labels.selectExpr("v AS u", "label AS lu")

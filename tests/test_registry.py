@@ -29,3 +29,30 @@ def test_query_modules_share_one_plumbing_module():
                        "_stream_base", "_drain_dirs", "_pin_batch_order"):
             if hasattr(mod, helper):
                 assert getattr(mod, helper) is getattr(qcommon, helper), (name, helper)
+
+
+def _query_modules():
+    return [importlib.import_module(f"sdg_engine.{m.name}")
+            for m in pkgutil.iter_modules(sdg_engine.__path__)
+            if m.name.startswith("queries")]
+
+
+def test_road_edges_are_built_only_in_the_graph_module():
+    """The road-edge fragment lives in graph.py, never in a query module."""
+    import inspect
+
+    for mod in _query_modules():
+        assert "nds[i - 1] AS a" not in inspect.getsource(mod), mod.__name__
+
+
+def test_query_modules_share_one_graph_module():
+    """Every graph primitive a query module exposes is graph.py's own."""
+    from sdg_engine import graph
+
+    for mod in _query_modules():
+        for helper in ("_BFS_NODE", "_PR_NODE_A", "_PR_NODE_B", "road_edges",
+                       "_spw_edges", "hubs", "bfs_hops", "label_propagation",
+                       "_components_jump", "connected_components"):
+            if hasattr(mod, helper):
+                assert getattr(mod, helper) is getattr(graph, helper), (
+                    mod.__name__, helper)
