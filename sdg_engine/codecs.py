@@ -172,6 +172,28 @@ def decode_image(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
+def luma(img: np.ndarray) -> np.ndarray:
+    """Float64 BT.601 luma of a decoded (h, w, 3) raster.  Every channel
+    is cast before its product, in this order: golden twins recompute
+    the same expression, so the float bits are part of the spec."""
+    return (
+        0.299 * img[:, :, 0].astype(np.float64)
+        + 0.587 * img[:, :, 1].astype(np.float64)
+        + 0.114 * img[:, :, 2].astype(np.float64)
+    )
+
+
+def milli_luma(img: np.ndarray) -> np.ndarray:
+    """Exact int64 BT.601 luma in milli-units (299R + 587G + 114B, so
+    0..255000): the elevation / gray raster of the integer image
+    kernels, whose results are then fold-order independent."""
+    return (
+        299 * img[:, :, 0].astype(np.int64)
+        + 587 * img[:, :, 1].astype(np.int64)
+        + 114 * img[:, :, 2].astype(np.int64)
+    )
+
+
 def encode_image(img: np.ndarray, fmt: str) -> bytes:
     """X2: ndarray -> bytes."""
     if fmt == "png":

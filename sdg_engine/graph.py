@@ -82,7 +82,7 @@ def _spw_edges(spark, sf_dir):
     """Weighted road-graph edges: the BFS cell quantization plus an
     integer Euclidean weight in cell-mils between cell centers
     (FLOOR(sqrt*1000) of integer deltas — deterministic)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     w = (
         "CAST(FLOOR(SQRT(CAST((FLOOR(u / 1000) - FLOOR(v / 1000)) "
         "* (FLOOR(u / 1000) - FLOOR(v / 1000)) "

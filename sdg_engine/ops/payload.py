@@ -354,14 +354,57 @@ def render_colormap_png(cells: DataFrame, tile_px: int = 8) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Per-image stats family (r05): every kernel below turns ONE decoded
+# image into one row of integer (or SPEC-rounded) stats.  They all run
+# on the one decode scaffold, per_image_stats; sdg_engine/queries_image.py
+# holds the table of queries that pairs each kernel with its pixel
+# input and output schema.
+# ---------------------------------------------------------------------------
+
+
+def per_image_stats(images: DataFrame, kernel, pixels,
+                    schema: str) -> DataFrame:
+    """Map-only decode -> pixels -> kernel -> row scaffold: each image
+    is decoded, ``pixels(img)`` turns the (h, w, 3) uint8 raster into
+    the kernel's input (codecs.milli_luma for the integer kernels,
+    codecs.luma for the float-luma ones, ``None`` for the raw RGB
+    raster), and the row is ``(image_id, *kernel(input))``.  ``schema``
+    lists the kernel's output columns ("n_px int, chk bigint"); the
+    column names are read from it.
+
+    Payload bytes never shuffle (zero Exchange, plan-pinned per query):
+    at 100 TB the stage splits by parquet row group and the only
+    exchange is whatever aggregate the caller adds.  Every focal halo
+    is interior to its image (edge-replicate / clamp borders), so no
+    cross-tile stitch is needed, and integer outputs are partitioning-
+    and fold-order-independent."""
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from sdg_engine.codecs import decode_image
+
+        for pdf in batches:
+            out = []
+            for rr in pdf.itertuples(index=False):
+                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
+                px = img if pixels is None else pixels(img)
+                out.append((rr.image_id, *kernel(px)))
+            yield pd.DataFrame(out, columns=["image_id", *cols])
+
+    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
+        _run, "image_id string, " + schema
+    )
+
+
+# ---------------------------------------------------------------------------
 # Horn hillshade (r05) — the classic GeoTrellis-style focal raster op,
 # luminance-as-elevation over the image tiles.
 # ---------------------------------------------------------------------------
 
 # SPEC shared with the golden twin (scripts/make_goldens.py) — the
 # expression ORDER is part of the spec so float64 bits match:
-#   z    = edge-replicated pad of the luminance raster (all-three-
-#          astype lum shape: 0.299*R + 0.587*G + 0.114*B)
+#   z    = edge-replicated pad of the luminance raster (codecs.luma:
+#          0.299*R + 0.587*G + 0.114*B, every channel cast first)
 #   dzdx = ((tr + 2*r + br) - (tl + 2*l + bl)) / 8.0
 #   dzdy = ((bl + 2*b + br) - (tl + 2*t + tr)) / 8.0
 #   slope  = arctan(Z_FACTOR * sqrt(dzdx*dzdx + dzdy*dzdy))
@@ -391,50 +434,15 @@ def horn_shade8(lum: np.ndarray) -> np.ndarray:
     return np.clip(np.floor(255.0 * shade + 0.5), 0, 255).astype(np.int64)
 
 
-def hillshade_stats(images: DataFrame) -> DataFrame:
-    """Per-image hillshade checksums: decode -> luminance-as-elevation
-    -> Horn 3x3 focal shade -> integer sums (fold-order exact).
-
-    Map-only mapInPandas like decode_stats — payload bytes never
-    shuffle; at 100 TB the stage splits by parquet row group and the
-    only exchange is whatever aggregate the caller adds.  The 3x3
-    halo is interior to each tile (edge-replicate pad), so no
-    cross-tile stitch is needed — the stitched-halo variant for
-    seamless mosaics is ops/raster's kring(1) halo exchange.
-    """
-
-    def _shade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                s8 = horn_shade8(lum)
-                out.append(
-                    (
-                        rr.image_id,
-                        int(s8.size),
-                        int(s8.sum()),
-                        int(s8.min()),
-                        int(s8.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_px", "sum_shade", "min_shade", "max_shade"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _shade,
-        "image_id string, n_px int, sum_shade bigint, "
-        "min_shade int, max_shade int",
-    )
+def hillshade_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
+    """Per-image hillshade checksums: luminance-as-elevation -> Horn
+    3x3 focal shade -> integer sums (fold-order exact).  The 3x3 halo
+    is interior to each tile (edge-replicate pad), so no cross-tile
+    stitch is needed — the stitched-halo variant for seamless mosaics
+    is ops/raster's kring(1) halo exchange.  Returns (n_px, sum_shade,
+    min_shade, max_shade)."""
+    s8 = horn_shade8(lum)
+    return (int(s8.size), int(s8.sum()), int(s8.min()), int(s8.max()))
 
 
 # ---------------------------------------------------------------------------
@@ -464,24 +472,13 @@ def sobel_mag(lum_i: np.ndarray) -> np.ndarray:
 
 
 def sobel_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
+    """Per-image Sobel edge stats: 3x3 Sobel L1 magnitude -> (n_px,
+    n_edges, sum_mag, max_mag).  The 3x3 halo is interior to each image
+    (edge-replicate), and every value is an exact BIGINT, so the
+    checksums are fold-order independent at any partitioning."""
     mag = sobel_mag(lum)
     return (int(mag.size), int((mag > SOBEL_EDGE_T).sum()),
             int(mag.sum()), int(mag.max()))
-
-
-def sobel_stats(images: DataFrame) -> DataFrame:
-    """Per-image Sobel edge stats: decode -> integer BT.601 luma ->
-    3x3 Sobel L1 magnitude -> (n_px, n_edges, sum_mag, max_mag).
-
-    Map-only (see _int_terrain_op): the 3x3 halo is interior to each
-    image (edge-replicate), and every value is an exact BIGINT, so the
-    checksums are fold-order independent at any partitioning.
-    """
-    return _int_terrain_op(
-        images, sobel_stats_kernel,
-        ["n_px", "n_edges", "sum_mag", "max_mag"],
-        "n_px int, n_edges int, sum_mag bigint, max_mag bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -541,60 +538,23 @@ def d8_flow_accum(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
 
 
 def d8_flow_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
+    """Per-image D8 flow-accumulation stats of the integer luma DEM as
+    exact-BIGINT summaries (n_px, n_sinks, sum_acc, max_acc, chk); the
+    per-image DAG sweep is local (a DEM tile's flow field is interior
+    under clamp borders)."""
     acc, n_sinks = d8_flow_accum(lum)
     wgt = (np.arange(acc.size, dtype=np.int64) % 97) + 1
     return (int(acc.size), n_sinks, int(acc.sum()), int(acc.max()),
             int((acc * wgt).sum()))
 
 
-def d8_flow_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 flow-accumulation stats: decode -> integer luma
-    DEM -> steepest-descent accumulation -> exact-BIGINT summaries.
-
-    Map-only (see _int_terrain_op); the per-image DAG sweep is local
-    (a DEM tile's flow field is interior under clamp borders)."""
-    return _int_terrain_op(
-        images, d8_flow_stats_kernel,
-        ["n_px", "n_sinks", "sum_acc", "max_acc", "chk"],
-        "n_px int, n_sinks int, sum_acc bigint, max_acc bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Terrain family (r05, continued): watershed basins, viewshed, and
 # priority-flood pit fill — the three classic DEM-conditioning /
 # visibility ops next to hillshade + D8 accumulation.  All integer,
-# all map-only; each has an INDEPENDENT golden twin that computes the
+# all on the map-only per_image_stats scaffold; each has an INDEPENDENT golden twin that computes the
 # same SPEC with a different algorithm (see scripts/make_goldens.py).
 # ---------------------------------------------------------------------------
-
-
-def _int_terrain_op(images: DataFrame, kernel, cols: list[str],
-                    schema_tail: str) -> DataFrame:
-    """Shared map-only scaffold for the integer terrain stats ops:
-    decode -> int64 milli-luma DEM -> per-image kernel(lum) -> row
-    tuple.  Payload bytes never shuffle (zero Exchange, plan-pinned
-    per query); every kernel output is an exact integer so results are
-    partitioning- and fold-order-independent."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    299 * img[:, :, 0].astype(np.int64)
-                    + 587 * img[:, :, 1].astype(np.int64)
-                    + 114 * img[:, :, 2].astype(np.int64)
-                )
-                out.append((rr.image_id, *kernel(lum)))
-            yield pd.DataFrame(out, columns=["image_id", *cols])
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _run, "image_id string, " + schema_tail
-    )
 
 
 def d8_watershed(lum_i: np.ndarray) -> tuple[np.ndarray, int]:
@@ -627,16 +587,6 @@ def watershed_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
     wgt = (np.arange(labels.size, dtype=np.int64) % 97) + 1
     return (int(labels.size), n_basins, int(sizes.max()),
             int((sizes * sizes).sum()), int(((labels + 1) * wgt).sum()))
-
-
-def watershed_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 watershed-basin stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, watershed_stats_kernel,
-        ["n_px", "n_basins", "largest_px", "sum_sq", "chk"],
-        "n_px int, n_basins int, largest_px int, sum_sq bigint, chk bigint",
-    )
 
 
 # Viewshed SPEC (shared with the golden twin):
@@ -702,16 +652,6 @@ def viewshed_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
             int(lum.ravel()[vis].sum()), int(wgt[vis].sum()))
 
 
-def viewshed_stats(images: DataFrame) -> DataFrame:
-    """Per-image viewshed stats from the center cell (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, viewshed_stats_kernel,
-        ["n_px", "n_visible", "sum_vis_lum", "chk"],
-        "n_px int, n_visible int, sum_vis_lum bigint, chk bigint",
-    )
-
-
 def pit_fill(lum_i: np.ndarray) -> np.ndarray:
     """DEPRESSION FILLING: filled(c) = max(elev(c), min over all
     border-reaching paths of the max elevation along the path) — the
@@ -758,16 +698,6 @@ def pit_fill_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int]:
             int((filled.ravel() * wgt).sum()))
 
 
-def pit_fill_stats(images: DataFrame) -> DataFrame:
-    """Per-image priority-flood pit-fill stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, pit_fill_stats_kernel,
-        ["n_px", "n_raised", "sum_delta", "chk"],
-        "n_px int, n_raised int, sum_delta bigint, chk bigint",
-    )
-
-
 # GLCM SPEC (shared with the golden twin): quantize q = min(15,
 # elev // 16000) (16 gray levels over the 0..255000 milli-luma
 # range); co-occurrence counts over the two directed offsets right
@@ -795,15 +725,6 @@ def glcm_features(lum_i: np.ndarray) -> tuple[int, int, int, int]:
         int((c * d2).sum()),
         int((c * c).sum()),
         int(((1000 * c) // (1 + d2)).sum()),
-    )
-
-
-def glcm_stats(images: DataFrame) -> DataFrame:
-    """Per-image GLCM texture stats (map-only; see _int_terrain_op)."""
-    return _int_terrain_op(
-        images, glcm_features,
-        ["n_pairs", "contrast", "energy", "homog_mils"],
-        "n_pairs int, contrast bigint, energy bigint, homog_mils bigint",
     )
 
 
@@ -867,17 +788,6 @@ def quadtree_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def quadtree_stats(images: DataFrame) -> DataFrame:
-    """Per-image quadtree-compression stats (map-only; see
-    _int_terrain_op)."""
-    return _int_terrain_op(
-        images, quadtree_stats_kernel,
-        ["n_px", "n_leaves", "max_depth", "sum_range", "sum_depth_px"],
-        "n_px int, n_leaves int, max_depth int, sum_range bigint, "
-        "sum_depth_px bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Marching-squares contour extraction stats (r05) — the raster->vector
 # contouring analogue (GeoTrellis-world: toVector/contour ops).
@@ -890,8 +800,10 @@ CONTOUR_ISO = 128.0
 
 
 def marching_squares_stats(lum: np.ndarray, iso: float = CONTOUR_ISO):
-    """(n_cells, n_cells_crossed, n_segments, sum_case) of the
-    marching-squares case grid — all integers, fold-order exact."""
+    """Per-image marching-squares contour stats at the iso-luminance
+    level of a float luma raster — threshold -> 2x2 case grid ->
+    (n_cells, n_cells_crossed, n_segments, sum_case), all integers,
+    fold-order exact."""
     m = lum >= iso
     case = (
         m[:-1, :-1].astype(np.int64)
@@ -910,41 +822,9 @@ def marching_squares_stats(lum: np.ndarray, iso: float = CONTOUR_ISO):
     )
 
 
-def contour_stats(images: DataFrame, iso: float = CONTOUR_ISO) -> DataFrame:
-    """Per-image marching-squares contour stats at the iso-luminance
-    level — decode -> threshold -> 2x2 case grid -> integer sums.
-    Map-only mapInPandas like decode_stats/hillshade_stats: payload
-    bytes never shuffle."""
-
-    def _ms(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                out.append((rr.image_id,) + marching_squares_stats(lum, iso))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_cells", "n_crossed", "n_segments",
-                         "sum_case"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _ms,
-        "image_id string, n_cells int, n_crossed int, n_segments int, "
-        "sum_case bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # r05 continuation: slope/aspect, Strahler order, histogram
-# equalization, 3x3 morphology — all integer-exact map-only kernels
+# equalization, 3x3 morphology — all integer-exact per_image_stats kernels
 # ---------------------------------------------------------------------------
 
 # slope/aspect SPEC (shared with the golden twin): Horn 3x3 gradients
@@ -1009,16 +889,6 @@ def slope_aspect_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def slope_aspect_stats(images: DataFrame) -> DataFrame:
-    """Per-image Horn slope/aspect stats (map-only; _int_terrain_op)."""
-    return _int_terrain_op(
-        images, slope_aspect_kernel,
-        ["n_px", "n_flat", "hist_chk", "n_steep", "sum_s2"],
-        "n_px int, n_flat bigint, hist_chk bigint, n_steep bigint, "
-        "sum_s2 bigint",
-    )
-
-
 def strahler_orders(lum_i: np.ndarray) -> np.ndarray:
     """STRAHLER stream order over the D8 flow DAG: a cell with no
     upstream is order 1; otherwise order = m + 1 if >= 2 upstream
@@ -1062,16 +932,6 @@ def strahler_stats_kernel(lum: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def strahler_stats(images: DataFrame) -> DataFrame:
-    """Per-image Strahler-order stats (map-only; _int_terrain_op)."""
-    return _int_terrain_op(
-        images, strahler_stats_kernel,
-        ["n_px", "max_order", "sum_order", "n_ge2", "chk"],
-        "n_px int, max_order bigint, sum_order bigint, n_ge2 bigint, "
-        "chk bigint",
-    )
-
-
 # hist-equalize SPEC (shared with the golden twin): v = lum // 1000
 # (0..255), cdf = inclusive cumulative histogram, cdfmin = smallest
 # nonzero cdf value, eq(v) = (cdf[v] - cdfmin) * 255 // max(npx -
@@ -1098,16 +958,6 @@ def hist_equalize_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int(np.unique(eq).size),
         int(eq.max()),
         int((wgt * eq).sum()),
-    )
-
-
-def hist_equalize_stats(images: DataFrame) -> DataFrame:
-    """Per-image histogram-equalization stats (map-only)."""
-    return _int_terrain_op(
-        images, hist_equalize_kernel,
-        ["n_px", "sum_eq", "n_levels_out", "max_eq", "chk"],
-        "n_px int, sum_eq bigint, n_levels_out bigint, max_eq bigint, "
-        "chk bigint",
     )
 
 
@@ -1144,16 +994,6 @@ def morphology_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def morphology_stats(images: DataFrame) -> DataFrame:
-    """Per-image 3x3 morphology stats (map-only)."""
-    return _int_terrain_op(
-        images, morphology_kernel,
-        ["n_px", "sum_erode", "sum_dilate", "n_edge", "chk"],
-        "n_px int, sum_erode bigint, sum_dilate bigint, n_edge bigint, "
-        "chk bigint",
-    )
-
-
 def median3_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     """3x3 MEDIAN FILTER under clamp borders — the order-statistic
     denoiser completing focal statistics (min/max live in morphology):
@@ -1178,16 +1018,6 @@ def median3_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def median3_stats(images: DataFrame) -> DataFrame:
-    """Per-image 3x3 median-filter stats (map-only)."""
-    return _int_terrain_op(
-        images, median3_kernel,
-        ["n_px", "sum_med", "n_changed", "max_absdiff", "chk"],
-        "n_px int, sum_med bigint, n_changed bigint, max_absdiff bigint, "
-        "chk bigint",
-    )
-
-
 def box_downscale_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     """2x BOX-FILTER DOWNSCALE (one pyramid level): each output pixel
     is the integer mean of its 2x2 block — (a+b+c+d) DIV 4, exact at
@@ -1208,16 +1038,6 @@ def box_downscale_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int(ds.max()),
         int(ds.min()),
         int((wgt * ds.ravel()).sum()),
-    )
-
-
-def box_downscale_stats(images: DataFrame) -> DataFrame:
-    """Per-image 2x box-downscale stats (map-only)."""
-    return _int_terrain_op(
-        images, box_downscale_kernel,
-        ["n_out", "sum_ds", "max_ds", "min_ds", "chk"],
-        "n_out int, sum_ds bigint, max_ds bigint, min_ds bigint, "
-        "chk bigint",
     )
 
 
@@ -1257,15 +1077,6 @@ def otsu_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     )
 
 
-def otsu_stats(images: DataFrame) -> DataFrame:
-    """Per-image Otsu binarization stats (map-only)."""
-    return _int_terrain_op(
-        images, otsu_kernel,
-        ["thr", "n_fg", "sum_fg", "chk"],
-        "thr int, n_fg bigint, sum_fg bigint, chk bigint",
-    )
-
-
 # TPI/TRI SPEC (shared with the golden twin): 8-neighborhood under
 # clamp borders; TPI = 8*center - sum(neighbors), TRI = sum(|center -
 # neighbor|); ridge/valley threshold on |TPI| in milli-luma units.
@@ -1298,16 +1109,6 @@ def tpi_tri_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int, int]:
         int((tpi > _TPI_T).sum()),
         int((tpi < -_TPI_T).sum()),
         int((wgt * tri.ravel()).sum()),
-    )
-
-
-def tpi_tri_stats(images: DataFrame) -> DataFrame:
-    """Per-image TPI/TRI terrain-index stats (map-only)."""
-    return _int_terrain_op(
-        images, tpi_tri_kernel,
-        ["n_px", "sum_tri", "max_tri", "n_ridge", "n_valley", "chk"],
-        "n_px int, sum_tri bigint, max_tri bigint, n_ridge bigint, "
-        "n_valley bigint, chk bigint",
     )
 
 
@@ -1348,16 +1149,6 @@ def flow_length_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int(length.sum()),
         int(length.max()),
         int((wgt * length).sum()),
-    )
-
-
-def flow_length_stats(images: DataFrame) -> DataFrame:
-    """Per-image D8 downstream flow-length stats (map-only)."""
-    return _int_terrain_op(
-        images, flow_length_kernel,
-        ["n_px", "n_sinks", "sum_len", "max_len", "chk"],
-        "n_px int, n_sinks int, sum_len bigint, max_len bigint, "
-        "chk bigint",
     )
 
 
@@ -1407,15 +1198,6 @@ def edt_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def edt_stats(images: DataFrame) -> DataFrame:
-    """Per-image exact-EDT stats (map-only)."""
-    return _int_terrain_op(
-        images, edt_kernel,
-        ["n_px", "n_fg", "sum_d2", "max_d2", "chk"],
-        "n_px int, n_fg bigint, sum_d2 bigint, max_d2 bigint, chk bigint",
-    )
-
-
 def fft_sharpness_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     """FFT SHARPNESS: 2-D real FFT of the exact milli-luma raster;
     high-frequency = wavenumber radius^2 beyond (min(h,w)//4)^2 with
@@ -1437,15 +1219,6 @@ def fft_sharpness_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     pm[0, 0] = -1.0
     k = int(np.argmax(pm))  # first max, row-major
     return (int(lum_i.size), ratio, k // p.shape[1], k % p.shape[1])
-
-
-def fft_sharpness_stats(images: DataFrame) -> DataFrame:
-    """Per-image FFT sharpness stats (map-only)."""
-    return _int_terrain_op(
-        images, fft_sharpness_kernel,
-        ["n_px", "hf_ratio_micros", "peak_u", "peak_v"],
-        "n_px int, hf_ratio_micros bigint, peak_u int, peak_v int",
-    )
 
 
 # SSIM constants at milli-luma scale: C1 = (0.01 * 255000)^2,
@@ -1487,15 +1260,6 @@ def ssim_recon_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     return (
         n, sy, int(np.floor(ssim * 1_000_000.0)),
         int((wgt * y.ravel()).sum()),
-    )
-
-
-def ssim_recon_stats(images: DataFrame) -> DataFrame:
-    """Per-image reconstruction-SSIM stats (map-only)."""
-    return _int_terrain_op(
-        images, ssim_recon_kernel,
-        ["n_px", "sum_recon", "ssim_micros", "chk"],
-        "n_px int, sum_recon bigint, ssim_micros bigint, chk bigint",
     )
 
 
@@ -1550,16 +1314,6 @@ def fast_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def fast_corner_stats(images: DataFrame) -> DataFrame:
-    """Per-image FAST-12 corner stats (map-only)."""
-    return _int_terrain_op(
-        images, fast_corner_kernel,
-        ["n_interior", "n_corners", "n_bright", "n_dark", "chk"],
-        "n_interior int, n_corners bigint, n_bright bigint, "
-        "n_dark bigint, chk bigint",
-    )
-
-
 # Fixed-point inverse-rotation matrix for the bilinear affine op:
 # 30 degrees, 16.16 literals — the SPEC both twins share.
 AFFINE_COS_FP = 56756  # round(cos(30deg) * 65536)
@@ -1610,15 +1364,6 @@ def affine_bilinear_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
         int(out.sum()),
         int(out.max()),
         int((wgt * out.ravel()).sum()),
-    )
-
-
-def affine_bilinear_stats(images: DataFrame) -> DataFrame:
-    """Per-image fixed-point bilinear rotation stats (map-only)."""
-    return _int_terrain_op(
-        images, affine_bilinear_kernel,
-        ["n_sampled", "sum_out", "max_out", "chk"],
-        "n_sampled bigint, sum_out bigint, max_out bigint, chk bigint",
     )
 
 
@@ -1713,25 +1458,6 @@ def canny_hysteresis_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     )
 
 
-def canny_hysteresis_stats(images: DataFrame) -> DataFrame:
-    """Per-image hysteresis edge stats (map-only)."""
-    return _int_terrain_op(
-        images, canny_hysteresis_kernel,
-        ["n_weak", "n_strong", "n_final", "chk"],
-        "n_weak bigint, n_strong bigint, n_final bigint, chk bigint",
-    )
-
-
-def hough_lines_stats(images: DataFrame) -> DataFrame:
-    """Per-image dominant-line Hough stats (map-only)."""
-    return _int_terrain_op(
-        images, hough_lines_kernel,
-        ["n_edges", "best_votes", "best_theta", "best_rho", "chk"],
-        "n_edges bigint, best_votes bigint, best_theta bigint, "
-        "best_rho bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Harris corner response (r05 wave 26) — the classical corner detector
 # next to FAST-12, ALL INTEGER.  SPEC shared by both twins:
@@ -1796,16 +1522,6 @@ def harris_corner_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
         int((np.maximum(core, 0) // 65536).sum()),
         int(core.max()) if core.size else 0,
         int((idx + 1).sum()),
-    )
-
-
-def harris_corner_stats(images: DataFrame) -> DataFrame:
-    """Per-image Harris corner stats (map-only)."""
-    return _int_terrain_op(
-        images, harris_corner_kernel,
-        ["n_interior", "n_corners", "sum_rq", "max_r", "chk"],
-        "n_interior bigint, n_corners bigint, sum_rq bigint, "
-        "max_r bigint, chk bigint",
     )
 
 
@@ -1882,15 +1598,6 @@ def zhang_suen_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
     return (n_fg, int(fg.sum()), it, int((idx + 1).sum()))
 
 
-def zhang_suen_stats(images: DataFrame) -> DataFrame:
-    """Per-image skeletonization stats (map-only)."""
-    return _int_terrain_op(
-        images, zhang_suen_kernel,
-        ["n_fg", "n_skel", "n_iters", "chk"],
-        "n_fg bigint, n_skel bigint, n_iters bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Local Binary Patterns (r05 wave 29) — the classical texture code next
 # to GLCM.  SPEC shared by both twins:
@@ -1924,15 +1631,6 @@ def lbp_texture_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int]:
         int(uniform.sum()),
         int(code.sum()),
         int((wgt * code.ravel()).sum()),
-    )
-
-
-def lbp_texture_stats(images: DataFrame) -> DataFrame:
-    """Per-image LBP texture stats (map-only)."""
-    return _int_terrain_op(
-        images, lbp_texture_kernel,
-        ["n_interior", "n_uniform", "sum_code", "chk"],
-        "n_interior bigint, n_uniform bigint, sum_code bigint, chk bigint",
     )
 
 
@@ -1997,15 +1695,6 @@ def canny_nms_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
     return (int(raw.sum()), int(keep.sum()), int((idx + 1).sum()))
 
 
-def canny_nms_stats(images: DataFrame) -> DataFrame:
-    """Per-image thin-edge stats (map-only)."""
-    return _int_terrain_op(
-        images, canny_nms_kernel,
-        ["n_raw", "n_thin", "chk"],
-        "n_raw bigint, n_thin bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Floyd-Steinberg dithering (r05 wave 30) — 1-bit halftoning with
 # integer error diffusion.  SPEC shared by both twins:
@@ -2064,15 +1753,6 @@ def dither_fs_kernel(lum_i: np.ndarray) -> tuple[int, int, int]:
         if nxt is not None:
             cur = nxt
     return (h * w, n_on, chk)
-
-
-def dither_fs_stats(images: DataFrame) -> DataFrame:
-    """Per-image Floyd-Steinberg dither stats (map-only)."""
-    return _int_terrain_op(
-        images, dither_fs_kernel,
-        ["n_px", "n_on", "chk"],
-        "n_px bigint, n_on bigint, chk bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2136,16 +1816,6 @@ def dog_blob_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     )
 
 
-def dog_blob_stats(images: DataFrame) -> DataFrame:
-    """Per-image DoG blob stats (map-only)."""
-    return _int_terrain_op(
-        images, dog_blob_kernel,
-        ["n_core", "n_bright", "n_dark", "sum_absdog", "chk"],
-        "n_core bigint, n_bright bigint, n_dark bigint, "
-        "sum_absdog bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # 2-level integer Haar DWT subband energies (r05 wave 37).  SPEC shared
 # by both twins, ALL INTEGER because the transform is UNNORMALIZED
@@ -2181,16 +1851,6 @@ def haar_energy_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
     sq = lambda x: int((x.astype(np.int64) ** 2).sum())  # noqa: E731
     return (hh * ww, sq(ll2), sq(h1), sq(v1), sq(d1),
             sq(h2), sq(v2), sq(d2))
-
-
-def haar_energy_stats(images: DataFrame) -> DataFrame:
-    """Per-image Haar subband energies (map-only)."""
-    return _int_terrain_op(
-        images, haar_energy_kernel,
-        ["n_px", "e_ll2", "e_h1", "e_v1", "e_d1", "e_h2", "e_v2", "e_d2"],
-        "n_px bigint, e_ll2 bigint, e_h1 bigint, e_v1 bigint,"
-        " e_d1 bigint, e_h2 bigint, e_v2 bigint, e_d2 bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2244,16 +1904,6 @@ def seam_carve_kernel(lum_i: np.ndarray) -> tuple[int, int, int, int, int]:
     return (cost, col, bottom, int(e.sum()), chk)
 
 
-def seam_carve_stats(images: DataFrame) -> DataFrame:
-    """Per-image vertical-seam stats (map-only)."""
-    return _int_terrain_op(
-        images, seam_carve_kernel,
-        ["seam_cost", "top_col", "bottom_col", "sum_energy", "chk"],
-        "seam_cost bigint, top_col bigint, bottom_col bigint,"
-        " sum_energy bigint, chk bigint",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Integer template matching (r05 wave 44).  SPEC shared by both twins:
 #   g = milli-luma // 1000
@@ -2293,16 +1943,6 @@ def template_match_kernel(lum_i: np.ndarray) -> tuple[int, ...]:
         flat // ow,
         flat % ow,
         int((ssd % 997).sum()),
-    )
-
-
-def template_match_stats(images: DataFrame) -> DataFrame:
-    """Per-image template-match stats (map-only)."""
-    return _int_terrain_op(
-        images, template_match_kernel,
-        ["n_pos", "best_ssd", "best_row", "best_col", "ssd_chk"],
-        "n_pos bigint, best_ssd bigint, best_row bigint,"
-        " best_col bigint, ssd_chk bigint",
     )
 
 
@@ -2376,26 +2016,3 @@ def palette_mediancut_kernel(px: np.ndarray) -> tuple[int, int, int, int]:
         chk += (i + 1) * (r * 65536 + g * 256 + b)
     return (len(colors), len(boxes), err, chk)
 
-
-def palette_mediancut_stats(images: DataFrame) -> DataFrame:
-    """Per-image median-cut palette stats (map-only)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w),
-                                   int(rr.h))
-                out.append((rr.image_id, *palette_mediancut_kernel(img)))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "n_distinct", "n_boxes", "err",
-                         "chk"],
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _run, "image_id string, n_distinct bigint, n_boxes bigint,"
-        " err bigint, chk bigint"
-    )

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import METERS_PER_DEG
-from ..codecs import decode_image
+from ..codecs import decode_image, luma
 from ..geom import clip_segments_to_rect
 from .spatial import segments_with_cells, with_point_cell
 
@@ -257,11 +257,7 @@ def summarize_tile_rows(rows, segs_of, cutoff: float,
     metas = []
     for i, row in enumerate(rows):
         img = decode_image(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
-        lum = (
-            0.299 * img[:, :, 0].astype(np.float64)
-            + 0.587 * img[:, :, 1].astype(np.float64)
-            + 0.114 * img[:, :, 2].astype(np.float64)
-        )
+        lum = luma(img)
         segs = segs_of(i, row)
         mask = burn_mask(int(row.w), int(row.h),
                          row.fp_xmin, row.fp_ymin, row.fp_xmax, row.fp_ymax,
@@ -319,11 +315,7 @@ def tile_summary(
     (which segments reach which tile, halo exchange) are what the Spark
     tests exercise."""
     img = decode_image(data, fmt, w, h)
-    lum = (
-        0.299 * img[:, :, 0].astype(np.float64)
-        + 0.587 * img[:, :, 1].astype(np.float64)
-        + 0.114 * img[:, :, 2].astype(np.float64)
-    )
+    lum = luma(img)
     mask = burn_mask(w, h, xmin, ymin, xmax, ymax, segs)
     if mask.any():
         dist_px = chamfer_distance(mask)
@@ -548,33 +540,10 @@ def label_region_stats(mask: np.ndarray) -> tuple[int, int, int]:
     return len(roots), max(roots.values()), n_fg
 
 
-def region_stats(images, iso: float = 128.0):
-    """Per-image connected-region stats of the (lum >= iso) mask —
-    map-only mapInPandas; payload bytes never shuffle.  Cross-TILE
+def region_kernel(lum: np.ndarray) -> tuple[int, int, int]:
+    """Per-image connected-region stats of the iso-128 (lum >= 128.0)
+    float-luma mask, for the map-only image-stats scaffold.  Cross-TILE
     region stitching at mosaic scale is the kring(1) halo pattern
-    (ops/raster burn) + a component merge on border runs — out of
-    scope here where tiles are whole images."""
-    import pandas as pd
-
-    def _reg(batches):
-        from sdg_engine.codecs import decode_image
-
-        for pdf in batches:
-            out = []
-            for rr in pdf.itertuples(index=False):
-                img = decode_image(bytes(rr.bytes), rr.fmt, int(rr.w), int(rr.h))
-                lum = (
-                    0.299 * img[:, :, 0].astype(np.float64)
-                    + 0.587 * img[:, :, 1].astype(np.float64)
-                    + 0.114 * img[:, :, 2].astype(np.float64)
-                )
-                n, largest, fg = label_region_stats(lum >= iso)
-                out.append((rr.image_id, n, largest, fg))
-            yield pd.DataFrame(
-                out, columns=["image_id", "n_regions", "largest_px", "n_fg"]
-            )
-
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _reg,
-        "image_id string, n_regions int, largest_px int, n_fg int",
-    )
+    (ops/raster burn) + a component merge on border runs — out of scope
+    here where tiles are whole images."""
+    return label_region_stats(lum >= 128.0)

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,22 +84,16 @@ def _spread(df, key: str = "doc_id"):
     return df
 
 
-def _fixture_sf(sf_dir: str) -> float:
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    return float(m.group(1)) if m else 0.001
-
-
-def _fixture_images(spark, sf_dir, pin_sf: float | None = None):
-    """Image fixture tables.  ``pin_sf`` pins a FIXED scale factor
-    regardless of sf_dir — required for the golden-backed oracle-checked
-    image queries, whose DuckDB oracles and committed goldens embed the
-    sf0.01 fixture (following sf_dir would make Spark and oracle read
-    different fixtures at any other scale)."""
+def _fixture_images(spark):
+    """Image fixture tables ``(images, roads)`` at the FIXED sf0.01
+    scale, whatever the query's sf_dir — required for the golden-backed
+    oracle-checked image queries, whose DuckDB oracles and committed
+    goldens embed the sf0.01 fixture (following sf_dir would make Spark
+    and oracle read different fixtures at any other scale)."""
     from .jobs.rai import fixture_dir
-
-    d = fixture_dir(pin_sf if pin_sf is not None else _fixture_sf(sf_dir))
     from .tablecache import read_table
 
+    d = fixture_dir(0.01)
     return (
         read_table(spark, os.path.join(d, "images.parquet")),
         read_table(spark, os.path.join(d, "roads.parquet")),

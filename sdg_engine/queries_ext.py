@@ -19,6 +19,7 @@ from .qcommon import (
     _stream_base,
 )
 from .graph import connected_components
+from .queries_image import GOLDEN_IMAGE_BOUND, golden_images
 
 
 # ---------------------------------------------------------------------------
@@ -781,7 +782,7 @@ def image_rai_summary(spark, sf_dir):
     needed a limit(2000) cap here."""
     from .jobs.rai import rai_summaries
 
-    images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, roads = _fixture_images(spark)
     per_image, _per_country = rai_summaries(spark, images, roads)
     mils = per_image.select(
         "country_code",
@@ -814,7 +815,7 @@ def image_cost_distance(spark, sf_dir):
     from .ops import raster as RS
     from .ops import spatial as SP
 
-    images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000002000")
     geo = SP.with_geo(subset)
     tiles = RS.burn_cost_summaries(
@@ -1138,7 +1139,7 @@ def geojson_roundtrip_roads(spark, sf_dir):
     boundaries and OSM extracts commonly arrive in."""
     import os
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     feat = F.to_json(F.struct(
         F.lit("Feature").alias("type"),
         F.struct(
@@ -1185,11 +1186,7 @@ def image_warp_utm(spark, sf_dir):
     from .ops import payload as PL
     from .ops import spatial as SP
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    subset = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return PL.warp_checksums(SP.with_geo(subset), "UTM:31")
+    return PL.warp_checksums(SP.with_geo(golden_images(spark)), "UTM:31")
 
 
 def image_decode_stats(spark, sf_dir):
@@ -1206,10 +1203,8 @@ def image_decode_stats(spark, sf_dir):
     """
     from .ops import payload as PL
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    # deterministic subset by key (an unordered LIMIT may pick a
-    # different subset across rounds/partitionings)
-    subset = images.filter(F.col("image_id") < "img000000000500")
+    images, _roads = _fixture_images(spark)
+    subset = images.filter(F.col("image_id") < GOLDEN_IMAGE_BOUND)
     stats = PL.decode_stats(subset)
     meta = subset.select(
         "image_id", "fmt", F.length("bytes").cast("int").alias("n_bytes")
@@ -1235,8 +1230,8 @@ def image_thumbnails(spark, sf_dir):
     invariants (test_pipeline_ops)."""
     from .ops import payload as PL
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    subset = images.filter(F.col("image_id") < "img000000000500")
+    images, _roads = _fixture_images(spark)
+    subset = images.filter(F.col("image_id") < GOLDEN_IMAGE_BOUND)
     th = PL.thumbnails(subset, 16, 16)
     meta = subset.select("image_id", "fmt")
     return meta.join(th, "image_id").select(
@@ -1260,7 +1255,7 @@ def image_near_dup_pairs(spark, sf_dir):
     tests/test_payload_lineage_skew.py::test_phash_near_dup_pairs."""
     from .ops import payload as PL
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000000400")
     return PL.phash_near_dup_pairs(subset, max_hamming=12)
 

@@ -39,6 +39,23 @@ from .graph import (
     label_propagation,
     road_edges,
 )
+from .queries_image import (
+    golden_images,
+    image_hillshade,
+    image_sobel_edges,
+    image_flow_d8,
+    image_watershed,
+    image_viewshed,
+    image_pit_fill,
+    image_contours,
+    image_regions,
+    image_texture_glcm,
+    image_quadtree,
+    image_slope_aspect,
+    image_strahler,
+    image_hist_equalize,
+    image_morphology,
+)
 
 
 # events.ts is TIMESTAMP_NTZ in the parquet; _prep pins the session to
@@ -338,7 +355,7 @@ def road_graph_bfs(spark, sf_dir):
     Output: hops -> node count + node-id checksum (BIGINT sums, exact).
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     edges = road_edges(roads).localCheckpoint()
     # 16 hops matches the oracle CTE's hop bound
     visited = bfs_hops(edges, hubs(edges), 16)
@@ -432,7 +449,7 @@ def roads_simplify_dp(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _dp(batches):
         from sdg_engine.geom import dp_keep_mask
@@ -456,120 +473,6 @@ def roads_simplify_dp(spark, sf_dir):
     )
 
 
-def image_hillshade(spark, sf_dir):
-    """Horn hillshade over the image tiles (luminance-as-elevation):
-    decode -> 3x3 focal shade -> integer checksums per image (the
-    classic GeoTrellis focal op re-expressed as a map-only Spark
-    stage).  jpg rows excluded (lossy decode has no independent twin —
-    decode-stats NULL policy); harness-bounded to the first 500 images
-    like the other golden-backed image queries.  Oracle: committed
-    INDEPENDENT golden (generator pixels + clamp-indexed Horn twin).
-    """
-    from .ops.payload import hillshade_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hillshade_stats(sel)
-
-
-def image_sobel_edges(spark, sf_dir):
-    """SOBEL EDGE DENSITY per image — the sharpness/blur curation
-    signal (blurry or flat images score low and get filtered before
-    training).  Decode -> integer BT.601 luma -> 3x3 Sobel L1
-    magnitude -> exact-BIGINT checksums; map-only like the other
-    decode-path queries.  jpg rows excluded (lossy decode has no
-    independent twin); harness-bounded to the first 500 images.
-    Oracle: committed INDEPENDENT golden (generator pixels +
-    clamp-indexed Sobel twin — all integer, so parity is trivial).
-    """
-    from .ops.payload import sobel_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return sobel_stats(sel)
-
-
-def image_flow_d8(spark, sf_dir):
-    """D8 FLOW-DIRECTION + ACCUMULATION over the image tiles
-    (luminance-as-elevation) — the hydrology terrain op (GeoTrellis
-    focal flow/accumulation analogue) next to hillshade: steepest
-    descent among the 8 neighbors (clamp borders, strict drop, FIRST
-    winner), then acc = 1 + sum(upstream) via ONE high-to-low
-    elevation sweep (strict descent makes the flow field a DAG).
-    Map-only mapInPandas — payload bytes never shuffle; every output
-    is an exact int64.  jpg excluded / first-500 bound like the other
-    golden-backed image queries.  Oracle: committed INDEPENDENT golden
-    (generator pixels + argmax-stacked targets + memoized postorder
-    DFS — a different accumulation algorithm than the engine sweep).
-    """
-    from .ops.payload import d8_flow_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return d8_flow_stats(sel)
-
-
-def image_watershed(spark, sf_dir):
-    """WATERSHED BASIN labeling over the image tiles — partition every
-    DEM into its D8 drainage basins (each cell labeled with the sink
-    its steepest-descent path terminates at).  Engine resolves labels
-    by vectorized POINTER JUMPING (O(log diameter) numpy rounds);
-    map-only mapInPandas, all-int64 outputs.  jpg excluded /
-    first-500 bound like the other golden-backed image queries.
-    Oracle: committed INDEPENDENT golden (generator pixels +
-    stacked-argmax targets + memoized scalar chain walking).
-    """
-    from .ops.payload import watershed_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return watershed_stats(sel)
-
-
-def image_viewshed(spark, sf_dir):
-    """VIEWSHED from the center cell (GeoTrellis viewshed analogue,
-    luminance-as-elevation): a target is visible iff every exact
-    integer-DDA intermediate sample along the ray subtends a strictly
-    smaller slope (cross-multiplied rationals — no floats anywhere).
-    Engine: vectorized any-violation sweep over ray steps; map-only.
-    Oracle: committed INDEPENDENT golden (same SPEC, visibility
-    reduced via running max-slope rationals instead).
-    """
-    from .ops.payload import viewshed_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return viewshed_stats(sel)
-
-
-def image_pit_fill(spark, sf_dir):
-    """PRIORITY-FLOOD depression filling (the DEM-conditioning pass
-    hydrology pipelines run before flow routing): filled(c) is the
-    unique minimax fixpoint max(elev, min over border-reaching paths
-    of the path max) — engine settles cells once each off a min-heap
-    seeded with the border ring (Barnes et al. 2014 recipe); map-only,
-    all-int64.  Oracle: committed INDEPENDENT golden (the same
-    fixpoint iterated as a shifted-view Bellman recurrence).
-    """
-    from .ops.payload import pit_fill_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return pit_fill_stats(sel)
-
-
 def image_zonal_stats(spark, sf_dir):
     """ZONAL STATISTICS (GeoTrellis polygonal-summary analogue): decode
     every harness image, assign its footprint center to a country via
@@ -589,10 +492,7 @@ def image_zonal_stats(spark, sf_dir):
     from .ops import payload as PL
     from .ops import spatial as SP
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
+    sel = golden_images(spark)
     cc = SP.assign_countries(SP.with_geo(sel), FX.get_country_rings(), level=9)
     stats = PL.decode_stats(sel)
     mils = "CAST(FLOOR(mean_lum * 1000.0 + 0.5) AS BIGINT)"
@@ -722,7 +622,7 @@ def mvt_pyramid_simplified(spark, sf_dir):
 
     from . import mvt as MVT
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     roads = roads.select("road_id", "coords").repartition(8).localCheckpoint()
     base = _stream_base(spark, "pyrsimp_")
 
@@ -754,7 +654,7 @@ def country_convex_hull(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.select(
         "country_code", F.explode("coords").alias("c")
     ).select("country_code", F.col("c.x").alias("x"), F.col("c.y").alias("y"))
@@ -774,35 +674,6 @@ def country_convex_hull(spark, sf_dir):
         _hull,
         "country_code string, n_points long, n_hull int, area_mils bigint",
     )
-
-
-def image_contours(spark, sf_dir):
-    """Marching-squares contour stats at iso-luminance 128 per image
-    (the raster->vector contouring op): decode -> case grid -> integer
-    segment/case sums.  jpg excluded, harness-bounded to 500 images;
-    oracle: committed independent golden (generator pixels + explicit
-    16-entry LUT twin)."""
-    from .ops.payload import contour_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return contour_stats(sel)
-
-
-def image_regions(spark, sf_dir):
-    """Connected-region stats of the iso-128 mask per image (the
-    region-group / polygonize precursor): scan-line union-find inside
-    a map-only stage.  Oracle: committed INDEPENDENT flood-fill golden.
-    jpg excluded, 500-image harness subset."""
-    from .ops.raster import region_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return region_stats(sel)
 
 
 # weekly retention cohorts over the events stream — one shared integer
@@ -1019,7 +890,7 @@ def roads_buffer_cells(spark, sf_dir):
     from .ops.spatial import road_segments
     from .sqlgen import apply_steps, grid_index_expr, point_seg_dist_steps
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = road_segments(roads)
     g = segs.selectExpr(
         "kind", "ax", "ay", "bx", "by",
@@ -1175,7 +1046,7 @@ def road_intersections(spark, sf_dir):
     """
     from .ops.spatial import road_segments, segments_with_cells
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = road_segments(roads).select(
         "road_id", "kind", "seg_id", "ax", "ay", "bx", "by"
     )
@@ -1778,7 +1649,7 @@ def triangle_count_roads(spark, sf_dir):
     Output: one row — triangle count + node-id checksum.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     # referenced by deg + both orientation sides
     und = road_edges(roads, undirected=True).localCheckpoint()
     deg = (
@@ -1975,7 +1846,7 @@ def route_interpolate(spark, sf_dir):
     driver compare stays tiny.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
@@ -2718,7 +2589,7 @@ def link_prediction_roads(spark, sf_dir):
     equi-join.  Same und/deg construction as triangle_count_roads.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     # deg + wedge sides + anti-join probe
     und = road_edges(roads, undirected=True).localCheckpoint()
     deg = (
@@ -2771,7 +2642,7 @@ def spatial_dbscan(spark, sf_dir):
     identical fragments + a pruned recursive-CTE reachability min.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     g = roads.selectExpr("explode(coords) AS c").selectExpr(
         "c.x AS x", "c.y AS y"
     ).selectExpr(f"{_DB_IX} AS ix", f"{_DB_IY} AS iy")
@@ -3050,7 +2921,7 @@ def label_propagation_roads(spark, sf_dir):
     Output: community size + node-id checksum per surviving label.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     und = road_edges(roads, undirected=True)
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
         und.selectExpr("v AS src", "u AS dst")
@@ -3080,7 +2951,7 @@ def voronoi_assign(spark, sf_dir):
     exchanges on anything wider than the vertex key.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     px = _VOR_Q.format(c="c.x")
     py = _VOR_Q.format(c="c.y")
     pts = roads.selectExpr(
@@ -3121,7 +2992,7 @@ def source_binaryfile_images(spark, sf_dir):
     """
     import os
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     out = f"{_stream_base(spark, 'binfiles_')}/files"
     flag = os.path.join(out, "_done")
     if not os.path.exists(flag):
@@ -3499,7 +3370,7 @@ def kcore_roads(spark, sf_dir):
     count, node-id checksum, core edge count.
     """
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     sym = road_edges(roads).localCheckpoint()
     with _drain_confs(spark):
         for _ in range(_KCORE_ROUNDS):
@@ -3893,24 +3764,6 @@ def doc_bigram_rarity(spark, sf_dir):
     )
 
 
-def image_texture_glcm(spark, sf_dir):
-    """GLCM TEXTURE features (Haralick contrast / energy /
-    homogeneity) — the texture-curation signal separating flat or
-    synthetic images from natural ones: 16-level quantized luma,
-    unnormalized co-occurrence over the right+down offsets, integer
-    features only (homogeneity uses per-cell integer DIV by
-    1+(i-j)^2, never a float fold).  Map-only like the other decode
-    queries.  Oracle: committed INDEPENDENT golden (scatter-add
-    matrix twin vs the engine's flat bincount)."""
-    from .ops.payload import glcm_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return glcm_stats(sel)
-
-
 def roads_sinuosity(spark, sf_dir):
     """SINUOSITY of every road polyline (path length / endpoint
     chord — the curviness metric linear referencing pipelines
@@ -3921,7 +3774,7 @@ def roads_sinuosity(spark, sf_dir):
     (only + - * / sqrt floor on the float path).  One hash exchange
     on road_id; per-kind rollup keeps the compare tiny."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
@@ -3965,24 +3818,6 @@ def roads_sinuosity(spark, sf_dir):
         F.sum("sin_micros").alias("sum_sin_micros"),
         F.max("sin_micros").alias("max_sin_micros"),
     )
-
-
-def image_quadtree(spark, sf_dir):
-    """QUADTREE homogeneous-block compression stats — the engine's
-    spatial quadtree family adapted to CONTENT (GeoTrellis-world:
-    pyramid/quad decomposition): a block is a leaf iff its luma range
-    <= 8000, else it splits in 4.  Map-only, all-integer.  Oracle:
-    committed INDEPENDENT golden — leaves selected BOTTOM-UP on
-    vectorized min/max pyramids (equivalent by range monotonicity
-    under containment; a genuinely different algorithm than the
-    engine's top-down split stack)."""
-    from .ops.payload import quadtree_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return quadtree_stats(sel)
 
 
 def streaming_static_enrich(spark, sf_dir):
@@ -4225,7 +4060,7 @@ def cells_line_density(spark, sf_dir):
     """
     from .sqlgen import grid_index_expr
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = roads.selectExpr("coords AS cs").selectExpr(
         "explode(transform(sequence(1, size(cs) - 1), "
         "i -> struct(cs[i - 1].x AS x1, cs[i - 1].y AS y1, "
@@ -4684,78 +4519,6 @@ def cells_getis_ord(spark, sf_dir):
     )
 
 
-def image_slope_aspect(spark, sf_dir):
-    """SLOPE / ASPECT classification (the terrain derivative the
-    reference's GeoTrellis stack publishes next to hillshade): Horn
-    3x3 gradients on the milli-luma DEM under clamp borders, aspect
-    bucketed into 8 octants by a first-match INTEGER rule (no atan2 —
-    sign/magnitude comparisons only, so parity is exact), slope energy
-    gx^2+gy^2 as int64.  Map-only mapInPandas like the other terrain
-    queries; jpg excluded / first-500 bound.  Oracle: committed
-    INDEPENDENT golden (generator pixels + np.ix_ clamp gathers + a
-    scalar per-pixel octant chain vs the engine's pad-slice
-    np.select)."""
-    from .ops.payload import slope_aspect_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return slope_aspect_stats(sel)
-
-
-def image_strahler(spark, sf_dir):
-    """STRAHLER STREAM ORDER over the D8 flow DAG — the stream-network
-    hierarchy op completing the hydrology family (flow -> accumulation
-    -> watershed -> order): order 1 at leaves, +1 where >= 2 upstream
-    branches of equal max order meet.  Engine: ONE high-to-low
-    elevation sweep (strict drop means upstream orders are final
-    before their target folds them).  Map-only; exact int64.  Oracle:
-    committed INDEPENDENT golden (stacked-argmax targets + memoized
-    postorder DFS)."""
-    from .ops.payload import strahler_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return strahler_stats(sel)
-
-
-def image_hist_equalize(spark, sf_dir):
-    """HISTOGRAM EQUALIZATION stats — the contrast-normalization step
-    of an imagery ingest pipeline, as the classic integer remap
-    eq(v) = (cdf(v) - cdfmin) * 255 // (npx - cdfmin) over 256 luma
-    levels (all integer division — exact at any partitioning).
-    Map-only; jpg excluded / first-500 bound.  Oracle: committed
-    INDEPENDENT golden (scalar counting-dict CDF vs the engine's
-    bincount/cumsum LUT)."""
-    from .ops.payload import hist_equalize_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hist_equalize_stats(sel)
-
-
-def image_morphology(spark, sf_dir):
-    """3x3 MORPHOLOGY (erosion / dilation / morphological gradient)
-    under clamp borders — the denoise/edge-strength curation signal
-    next to Sobel; min/max filters are also the focal-statistics
-    primitive of the raster family.  Engine: edge-replicated pad + 8
-    contiguous slice min/maxes (views, never gathers).  Map-only;
-    exact int64.  Oracle: committed INDEPENDENT golden (np.ix_ clamp
-    gathers per offset)."""
-    from .ops.payload import morphology_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return morphology_stats(sel)
-
-
 # SQ8 SPEC (shared with the oracle): per-tensor scalar quantization
 # q = clamp(FLOOR((x - mn) * 255 / (mx - mn)), 0, 255) over the GLOBAL
 # component range; identical FLOOR chain text in both engines (IEEE).
@@ -4856,7 +4619,7 @@ def roads_supercover_cells(spark, sf_dir):
 
     n = 1 << _SC_LEVEL
     bnd = f"(CAST({{k}} AS DOUBLE) * (CAST(10 AS DOUBLE) / CAST({n} AS DOUBLE)))"
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = roads.selectExpr("kind", "coords AS cs").selectExpr(
         "kind",
         "explode(transform(sequence(1, size(cs) - 1), "
@@ -5005,7 +4768,7 @@ def roads_dissolve(spark, sf_dir):
     keys so components never cross kinds).  Oracle: pruned
     recursive-CTE reachability min over the identical node keys."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     na = _BFS_NODE.format(
         x="element_at(coords, 1).x", y="element_at(coords, 1).y"
     )

@@ -558,7 +558,7 @@ def closeness_roads(spark, sf_dir):
     (reached - 1) / sum(hops) in FLOOR micros.  Oracle: DuckDB
     recursive CTE over (seed, node) pairs with MIN(hops) dedup — the
     road_graph_bfs twin generalized to a labeled walk."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     edges = road_edges(roads).localCheckpoint()
     seeds = hubs(edges, 5).selectExpr("node AS seed", "node")
     # same hop bound as road_graph_bfs

@@ -27,6 +27,12 @@ from .qcommon import (
     _pin_batch_order,
 )
 from .graph import hubs, road_edges
+from .queries_image import (
+    image_tpi_tri,
+    image_flow_length,
+    image_box_downscale,
+    image_median3,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOUR_US = 3_600_000_000
@@ -387,7 +393,7 @@ def roads_hausdorff(spark, sf_dir):
     twice (min over B per a-vertex, then max over a-vertices).  The
     blocking key is COALESCE-wrapped (gotcha 11)."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     first = roads.selectExpr(
         "road_id",
         "COALESCE(CAST(FLOOR(coords[0].x * 10) AS BIGINT) * 100000 "
@@ -429,42 +435,6 @@ def roads_hausdorff(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Terrain kernels (golden-oracle-checked, map-only)
 # ---------------------------------------------------------------------------
-
-def image_tpi_tri(spark, sf_dir):
-    """TPI / TRI terrain indexes (Weiss topographic position; Riley
-    ruggedness) — the landform-classification signals next to
-    slope/aspect: TPI = 8*center - neighborhood sum (ridge/valley when
-    |TPI| clears the milli-luma threshold), TRI = sum of absolute
-    neighbor differences.  All-int64, map-only mapInPandas like the
-    other terrain queries; jpg excluded / first-500 bound.  Oracle:
-    committed INDEPENDENT golden (generator pixels + np.ix_ clamp
-    gathers vs the engine's pad slices)."""
-    from .ops.payload import tpi_tri_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return tpi_tri_stats(sel)
-
-
-def image_flow_length(spark, sf_dir):
-    """D8 DOWNSTREAM FLOW LENGTH — the hydrology distance-to-outlet op
-    completing the flow family (direction -> accumulation -> watershed
-    -> order -> LENGTH): per-cell path length along the steepest-
-    descent chain to its sink, integer 10/14 cardinal/diagonal weights
-    decided by the EFFECTIVE (clamp-degraded) displacement.  Engine:
-    vectorized pointer jumping with additive lengths (O(log path)
-    rounds).  Map-only; exact int64.  Oracle: committed INDEPENDENT
-    golden (stacked-argmax targets + memoized scalar chain walks)."""
-    from .ops.payload import flow_length_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return flow_length_stats(sel)
-
 
 # ---------------------------------------------------------------------------
 # Bounded DTW (dynamic time warping) between daily event-type series
@@ -586,7 +556,7 @@ def betweenness_roads(spark, sf_dir):
     Oracle: the identical recurrence as a generated linear CTE chain
     (single back-reference per round, MATERIALIZED multi-referenced
     bases — the label_propagation/shortest_path pattern)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     edges = road_edges(roads).localCheckpoint()
     seeds = hubs(edges, _BC_SEEDS).selectExpr("node AS seed")
     with _drain_confs(spark):
@@ -660,23 +630,6 @@ def betweenness_roads(spark, sf_dir):
         .filter("rk <= 10")
         .select("rk", "node", "bc_micros", "n_seeds")
     )
-
-
-def image_box_downscale(spark, sf_dir):
-    """2x BOX-FILTER DOWNSCALE — the image-pyramid level every
-    multiresolution serving/training pipeline materializes (the raster
-    twin of the cell-rollup spatial_pyramid): each output pixel is the
-    integer mean of a 2x2 milli-luma block ((a+b+c+d) DIV 4 — exact at
-    any partitioning).  Map-only; jpg excluded / first-500 bound.
-    Oracle: committed INDEPENDENT golden (generator pixels + reshape
-    blocks vs the engine's strided slices)."""
-    from .ops.payload import box_downscale_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return box_downscale_stats(sel)
 
 
 # Rolling-OLS one-step forecast: shared integer window sums (k = 12
@@ -779,22 +732,6 @@ def orders_rank_functions(spark, sf_dir):
     )
 
 
-def image_median3(spark, sf_dir):
-    """3x3 MEDIAN FILTER stats — the order-statistic denoiser
-    completing the focal family (morphology has min/max, TPI/TRI the
-    linear stats): median of 9 = 5th smallest, exact integer at any
-    partitioning.  Map-only; jpg excluded / first-500 bound.  Oracle:
-    committed INDEPENDENT golden (generator pixels + sorted np.ix_
-    clamp gathers vs the engine's pad-slice np.partition)."""
-    from .ops.payload import median3_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return median3_stats(sel)
-
-
 def roads_resample_points(spark, sf_dir):
     """POLYLINE RESAMPLING at fixed arc-length fractions t = k/8,
     k = 1..7 (dynamic segmentation — the generalization of
@@ -808,7 +745,7 @@ def roads_resample_points(spark, sf_dir):
     explode on the segment rows, one filtered projection; per-(kind,k)
     rollup keeps the compare tiny."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr("road_id", "kind", "i", "c.x AS x", "c.y AS y")
@@ -958,7 +895,7 @@ def roads_frechet(spark, sf_dir):
     semiring)."""
     import pandas as pd
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     first = roads.selectExpr(
         "road_id",
         "COALESCE(CAST(FLOOR(coords[0].x * 10) AS BIGINT) * 100000 "

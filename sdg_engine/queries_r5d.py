@@ -27,6 +27,12 @@ from .qcommon import (
     _stream_base,
 )
 from .graph import _components_jump, _spw_edges
+from .queries_image import (
+    image_otsu,
+    image_edt,
+    image_fft_sharpness,
+    image_ssim_recon,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _HOLD_US = 1_800_000_000  # 30-minute hold per event
@@ -179,7 +185,7 @@ def roads_bearing_octants(spark, sf_dir):
     scale.  The oracle derives segments by direct list indexing (no
     window at all), so the window plumbing is independently checked."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr(
@@ -406,24 +412,6 @@ def points_snap_roads(spark, sf_dir):
 # Otsu binarization (exact integer argmax)
 # ---------------------------------------------------------------------------
 
-def image_otsu(spark, sf_dir):
-    """OTSU THRESHOLD per image — the classic histogram-based
-    binarization (the segmentation step before region labeling).
-    Exact: the between-class-variance argmax is compared as
-    cross-multiplied arbitrary-precision integers (the squared
-    numerator overflows int64), smallest-t tie-break.  Map-only; jpg
-    excluded / first-500 bound.  Oracle: committed INDEPENDENT golden
-    (Counter histogram + incremental running sums + Fraction compare
-    vs the engine's bincount cumsums)."""
-    from .ops.payload import otsu_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return otsu_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Chained stateful streaming aggregations (Spark 4 multi-stateful)
 # ---------------------------------------------------------------------------
@@ -599,23 +587,6 @@ def xml_roundtrip_events(spark, sf_dir):
 # Exact Euclidean distance transform
 # ---------------------------------------------------------------------------
 
-def image_edt(spark, sf_dir):
-    """EXACT squared EUCLIDEAN DISTANCE TRANSFORM to the nearest bright
-    pixel — the exact companion to image_cost_distance's chamfer 3-4
-    approximation (proximity rasters, buffer masks).  Map-only; jpg
-    excluded / first-500 bound.  Oracle: committed golden from the
-    INDEPENDENT Felzenszwalb-Huttenlocher lower-envelope algorithm
-    with exact Fraction hull intersections (vs the engine's
-    nearest-seed scans + vectorized offset broadcast)."""
-    from .ops.payload import edt_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return edt_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Decision stump (best Gini split, exact integers + one shared division)
 # ---------------------------------------------------------------------------
@@ -723,25 +694,6 @@ def events_rolling_wau(spark, sf_dir):
 # FFT sharpness (frequency-domain curation signal)
 # ---------------------------------------------------------------------------
 
-def image_fft_sharpness(spark, sf_dir):
-    """FFT SHARPNESS: fraction of spectral energy above a quarter-
-    Nyquist radius — the frequency-domain blur/sharpness curation
-    signal next to Sobel's spatial one.  The 2-D rfft runs on the
-    exact integer milli-luma raster; the mask is a pure-integer
-    wavenumber-radius compare; energies are float64 with the argmax
-    over non-DC magnitude deterministic (first max).  Oracle: golden
-    twin regenerates the pixels from the generator SPEC and runs the
-    same in-process rfft2 (the decode_stats precedent — the DECODE
-    path is what the comparison exercises)."""
-    from .ops.payload import fft_sharpness_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return fft_sharpness_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Polygon∩polygon overlay (Sutherland-Hodgman vs a convex AOI)
 # ---------------------------------------------------------------------------
@@ -821,7 +773,7 @@ def roads_topology_errors(spark, sf_dir):
     one kind rollup."""
     from .sqlgen import apply_steps, point_seg_dist_steps
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     ends = roads.selectExpr(
         "road_id", "kind",
         "explode(array("
@@ -993,7 +945,7 @@ def webdataset_roundtrip_images(spark, sf_dir):
 
     from .queries_r5 import _b12_cells
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     sel = images.filter("image_id < 'img000000000200'").select(
         "image_id", "fmt", "bytes", "caption"
     )
@@ -1225,7 +1177,7 @@ def roads_in_aoi_length(spark, sf_dir):
     partitioning."""
 
     lo, hi, feas = _aoi_halfplane_exprs()
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     verts = roads.selectExpr(
         "road_id", "kind", "posexplode(coords) AS (i, c)"
     ).selectExpr("road_id", "kind", "i", "c.x AS vx", "c.y AS vy")
@@ -1272,7 +1224,7 @@ def multimodal_caption_consistency(spark, sf_dir):
     emits the pairs with their hamming and the agreement flag."""
     from .ops import payload as PL
 
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    images, _roads = _fixture_images(spark)
     subset = images.filter(F.col("image_id") < "img000000000400")
     pairs = PL.phash_near_dup_pairs(subset, max_hamming=6)
     caps = subset.select("image_id", "caption")
@@ -1293,24 +1245,6 @@ def multimodal_caption_consistency(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # SSIM reconstruction quality + winsorized mean
 # ---------------------------------------------------------------------------
-
-def image_ssim_recon(spark, sf_dir):
-    """GLOBAL SSIM of the 2x box-downscale + nearest-upsample
-    reconstruction — the perceptual quality metric beyond PSNR (X3):
-    how much signal a pyramid level loses, per image.  Moment sums are
-    exact int64; one SPEC'd double chain evaluates the closed form and
-    FLOORs to micros.  Map-only; jpg excluded / first-500 bound.
-    Oracle: committed golden with independent mechanics (reshape
-    blocks + np.kron + python-int sums vs strided slices + np.repeat +
-    numpy sums)."""
-    from .ops.payload import ssim_recon_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return ssim_recon_stats(sel)
-
 
 def supplier_winsorized_mean(spark, sf_dir):
     """WINSORIZED MEAN of supplier balances (clip at the exact p10/p90

@@ -21,6 +21,12 @@ from .graph import (
     hubs,
     road_edges,
 )
+from .queries_image import (
+    image_fast_corners,
+    image_affine_bilinear,
+    image_hough_lines,
+    image_canny_hysteresis,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
@@ -39,7 +45,7 @@ def roads_graph_diameter(spark, sf_dir):
     (hops desc, node asc) deterministic.  Oracle: TWO chained
     recursive CTEs over the same quantized graph, identical 32-hop
     bound."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     edges = road_edges(roads).localCheckpoint()
     hub = hubs(edges)
     lab1 = bfs_hops(edges, hub, _DIAM_MAX_HOPS)
@@ -67,24 +73,6 @@ def roads_graph_diameter(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # FAST-12 corner detection
 # ---------------------------------------------------------------------------
-
-def image_fast_corners(spark, sf_dir):
-    """FAST-12 CORNER DETECTION (the keypoint/texture curation signal
-    next to Sobel and Harris-free GLCM): a pixel is a corner when some
-    CONTIGUOUS circular arc of >= 12 of its 16 Bresenham-circle
-    neighbors is uniformly brighter (or darker) than center +- t.
-    Pure-integer comparisons on milli-luma; interior pixels only.
-    Engine: 16 shifted views -> packed 16-bit codes -> sliced circular
-    AND; golden twin: the SAME codes through a 65536-entry max-run
-    LOOKUP TABLE built scalar — two different run detectors."""
-    from .ops.payload import fast_corner_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return fast_corner_stats(sel)
-
 
 # ---------------------------------------------------------------------------
 # Seasonal decomposition (trend / day-of-week seasonal / residual)
@@ -213,24 +201,6 @@ def hll_union_merge(spark, sf_dir):
 # Fixed-point bilinear affine rotation
 # ---------------------------------------------------------------------------
 
-def image_affine_bilinear(spark, sf_dir):
-    """AFFINE ROTATION with FIXED-POINT BILINEAR resampling — the
-    interpolation family the nearest-neighbour CRS warp deliberately
-    avoided, made hash-exact: the inverse-rotation matrix is an
-    integer 16.16 fixed-point literal, source coordinates stay
-    integral on a doubled grid, and the bilinear weights quantize to
-    1/256 BEFORE the blend so every output pixel is one exact integer
-    expression.  Map-only; out-of-bounds samples are skipped (counted).
-    Oracle: committed golden with gather-based mechanics."""
-    from .ops.payload import affine_bilinear_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return affine_bilinear_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Streaming dedup -> window chain
 # ---------------------------------------------------------------------------
@@ -263,25 +233,6 @@ def streaming_dedup_then_window(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Hough line transform (wave 23)
 # ---------------------------------------------------------------------------
-
-def image_hough_lines(spark, sf_dir):
-    """DOMINANT-LINE HOUGH TRANSFORM over the certified Sobel edge map
-    — the straight-structure curation signal (documents/buildings/
-    horizons score high, natural texture low).  ALL INTEGER: 12
-    fixed-point 15-degree theta bins, 4-pixel rho bins, votes by
-    bincount; argmax tie-break is the smallest (theta, rho), and the
-    checksum folds votes^2 over the accumulator so the full vote
-    surface is oracle-visible.  Map-only (payload bytes never
-    shuffle).  Oracle: committed golden with np.add.at scatter
-    mechanics over clamp-indexed generator pixels."""
-    from .ops.payload import hough_lines_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return hough_lines_stats(sel)
-
 
 # ---------------------------------------------------------------------------
 # Customer concentration deciles (Lorenz table)
@@ -361,7 +312,7 @@ def roads_strokes(spark, sf_dir):
     Stroke lengths fold FLOOR-micro segment lengths (exact BIGINTs).
     Oracle: identical fragments + the pruned recursive-CTE
     reachability min (the dissolve technique) in DuckDB."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     segs = (
         roads.selectExpr(
             "CAST(road_id AS STRING) AS rid", "kind", "coords",
@@ -491,24 +442,6 @@ def quantile_sketch_eval(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Hysteresis edge linking (wave 25)
 # ---------------------------------------------------------------------------
-
-def image_canny_hysteresis(spark, sf_dir):
-    """TWO-THRESHOLD HYSTERESIS EDGE LINKING (the Canny stage after
-    the gradient): weak edges survive only when 8-connected — through
-    other weak pixels — to a strong edge, killing isolated noise while
-    keeping faint continuations of real contours.  The engine kernel
-    is a vectorized dilation fixpoint; the golden twin floods with a
-    scalar BFS deque — two different algorithms meeting at the unique
-    connected closure.  Map-only; every output is an exact integer.
-    Oracle: committed golden over clamp-indexed generator pixels."""
-    from .ops.payload import canny_hysteresis_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return canny_hysteresis_stats(sel)
-
 
 # ---------------------------------------------------------------------------
 # Exact best-F1 operating point (wave 25)

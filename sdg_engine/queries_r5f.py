@@ -13,6 +13,14 @@ from pyspark.sql import functions as F
 
 from .qcommon import _t, _drain_confs, _fixture_images, _stream_base
 from .graph import _DIAM_MAX_HOPS, bfs_hops, hubs, road_edges
+from .queries_image import (
+    image_harris_corners,
+    image_skeleton_zs,
+    image_lbp_texture,
+    image_canny_nms,
+    image_dither_fs,
+    image_dog_blobs,
+)
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
 _DAY_US = 86_400_000_000
@@ -227,24 +235,6 @@ def observe_scan_metrics(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Harris corners (golden-backed, map-only)
 # ---------------------------------------------------------------------------
-
-def image_harris_corners(spark, sf_dir):
-    """HARRIS CORNER DETECTION (the classical eigen-response detector
-    next to FAST-12's arc test — two independent keypoint signals for
-    image curation): all-integer response R = 20·det(M) − trace(M)²
-    (k = 0.05 exactly) over 3×3-summed Sobel products on the
-    255-scale gray raster, deterministic raster-order NMS.  Map-only
-    over the decode path — payload bytes never shuffle.  Golden twin
-    recomputes the SPEC via np.ix_ gathers + summed-area-table box
-    sums + scalar NMS (three independent mechanisms)."""
-    from .ops.payload import harris_corner_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return harris_corner_stats(sel)
-
 
 # ---------------------------------------------------------------------------
 # One-way ANOVA F (wave 28)
@@ -547,24 +537,6 @@ def bpe_encode_docs(spark, sf_dir):
 # Zhang-Suen skeletonization (wave 27, golden-backed, map-only)
 # ---------------------------------------------------------------------------
 
-def image_skeleton_zs(spark, sf_dir):
-    """MORPHOLOGICAL SKELETONIZATION (Zhang-Suen thinning) — reduces
-    every bright region to its 1-px medial skeleton, the classical
-    shape-analysis step after binarization (stroke extraction for the
-    document-image curation family).  Synchronous two-sub-pass
-    deletion to the deterministic fixpoint; map-only over the decode
-    path.  Golden twin drives the same SPEC through 256-entry
-    predicate LUTs built with scalar loops (vs the engine's slice
-    arithmetic)."""
-    from .ops.payload import zhang_suen_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return zhang_suen_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Wave 29: SQL pipe syntax, LBP texture, Canny NMS, zlib compressibility
 # ---------------------------------------------------------------------------
@@ -628,40 +600,6 @@ def doc_zlib_ratio(spark, sf_dir):
     )
 
 
-def image_lbp_texture(spark, sf_dir):
-    """LOCAL BINARY PATTERNS (Ojala texture codes — the
-    rotation-sensitive micro-texture signal next to GLCM's
-    co-occurrence statistics): 8-bit neighbor-comparison codes with
-    the uniform-pattern count (circular transitions <= 2), all
-    integer, map-only.  Golden twin packs the same comparisons via
-    flat np.take gathers + a scalar-built 256-entry transition LUT."""
-    from .ops.payload import lbp_texture_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return lbp_texture_stats(sel)
-
-
-def image_canny_nms(spark, sf_dir):
-    """CANNY DIRECTIONAL NON-MAX SUPPRESSION — the thin-edge stage
-    between the certified Sobel magnitude and the hysteresis linker:
-    gradient direction quantized to 22.5-degree sectors by
-    cross-multiplied integer tests (TAN22_FP = 106, no atan2), each
-    edge pixel survives only as the strict maximum along its own
-    gradient line (raster-earlier neighbor breaks ties).  Map-only,
-    all-integer.  Golden twin resolves every candidate with a scalar
-    loop."""
-    from .ops.payload import canny_nms_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return canny_nms_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Wave 30: pinball-loss forecast eval, FS dithering, audio decimation
 # ---------------------------------------------------------------------------
@@ -723,23 +661,6 @@ def events_pinball_eval(spark, sf_dir):
     )
 
 
-def image_dither_fs(spark, sf_dir):
-    """FLOYD-STEINBERG DITHERING — 1-bit halftoning with integer error
-    diffusion (the display/compression preprocessing op; also the
-    classic example of an inherently SEQUENTIAL per-image kernel that
-    still parallelizes perfectly ACROSS images behind the map-only
-    decode path).  All-integer FLOOR diffusion; golden twin is a fully
-    scalar 2-D list walk.  A mid-gray field dithers to ~50% on-pixels
-    (pinned analytically in pytest)."""
-    from .ops.payload import dither_fs_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return dither_fs_stats(sel)
-
-
 def multimodal_audio_decimate(spark, sf_dir):
     """SAMPLE-RATE REDUCTION (decimate-by-2 through the classic 32-sum
     half-band FIR, all-integer with floor division) over the REAL-WAV
@@ -785,23 +706,6 @@ def simhash_neardup_pairs(spark, sf_dir):
     return cand.selectExpr(
         "a AS doc_a", "b AS doc_b", "bit_count(sa ^ sb) AS hamming"
     ).filter("hamming <= 6")
-
-
-def image_dog_blobs(spark, sf_dir):
-    """DIFFERENCE-OF-GAUSSIANS BLOB DETECTION — completes the keypoint
-    triad (Harris corners, Canny thin edges, DoG blobs): two levels of
-    the separable binomial pyramid on MILLI-luma (the fixture is
-    smooth; gray-unit DoG rounds away), two-polarity extremum NMS with
-    the deterministic raster-earlier tie rule, all integer, map-only.
-    Golden twin convolves via flat np.take gathers and resolves every
-    candidate with a scalar loop."""
-    from .ops.payload import dog_blob_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return dog_blob_stats(sel)
 
 
 # ---------------------------------------------------------------------------
@@ -880,7 +784,7 @@ def roads_bipartite_check(spark, sf_dir):
     certified frontier loop), then one pass over the edges counts
     same-parity endpoints — each is an odd cycle witness.  Oracle:
     recursive-CTE BFS + identical conflict count."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     edges = road_edges(roads).localCheckpoint()
     visited = bfs_hops(edges, hubs(edges), _DIAM_MAX_HOPS).localCheckpoint()
     lab = visited.selectExpr("node", "hops % 2 AS par")

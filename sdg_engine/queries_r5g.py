@@ -33,6 +33,12 @@ from .qcommon import (
     _stream_base,
 )
 from .graph import label_propagation, road_edges
+from .queries_image import (
+    image_haar_energy,
+    image_seam_carve,
+    image_template_match,
+    image_palette_mediancut,
+)
 
 
 _TS_US = "unix_micros(CAST(ts AS TIMESTAMP))"
@@ -479,39 +485,6 @@ def doc_term_chisq(spark, sf_dir):
 # Wave 37: Haar DWT subband energies + vertical seam carving
 # ---------------------------------------------------------------------------
 
-def image_haar_energy(spark, sf_dir):
-    """2-LEVEL INTEGER HAAR DWT subband energies — the wavelet
-    frequency-split every compression/denoise/texture pipeline starts
-    from, in its UNNORMALIZED sum/difference form so the transform is
-    EXACT integer arithmetic (no division, no rounding spec to agree
-    on — the energies are fold-order-free BIGINTs by construction).
-    Map-only behind the decode path; golden twin gathers each 2x2
-    block corner with scalar loops (vs the engine's strided slices)."""
-    from .ops.payload import haar_energy_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return haar_energy_stats(sel)
-
-
-def image_seam_carve(spark, sf_dir):
-    """VERTICAL SEAM CARVING — the content-aware-resize DP (min-energy
-    top-to-bottom 8-connected path over the clamped-gradient energy
-    map), the third inherently-sequential-per-image kernel next to the
-    dither and the skeleton fixpoint: row-vectorized DP in the engine,
-    fully scalar DP in the golden, leftmost-argmin ties in both.
-    Parallel across images, payload bytes never shuffle."""
-    from .ops.payload import seam_carve_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return seam_carve_stats(sel)
-
-
 # ---------------------------------------------------------------------------
 # Wave 38: encoded-polyline roundtrip
 # ---------------------------------------------------------------------------
@@ -528,7 +501,7 @@ def polyline_roundtrip_roads(spark, sf_dir):
     integers and checked against DuckDB quantizing the source coords
     directly.  Map-only; geometry never shuffles."""
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _encode(batches):
         from sdg_engine.polyline import encode_polyline
@@ -675,7 +648,7 @@ def community_modularity(spark, sf_dir):
     ppm; negative-numerator DIV truncation differs across engines, so
     the division runs in DOUBLE, gotcha-7 discipline).  The Q window
     sum runs over the communities relation (small by construction)."""
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     # probed by LP rounds AND the intra-edge pass
     und = road_edges(roads, undirected=True).localCheckpoint()
     dirs = und.selectExpr("u AS src", "v AS dst").unionAll(
@@ -1083,22 +1056,6 @@ def ann_matryoshka_recall(spark, sf_dir):
 _VW_A2_MIN = 1_000_000  # twice-area threshold in (1e-5 deg)^2 units
 
 
-def image_template_match(spark, sf_dir):
-    """INTEGER TEMPLATE MATCHING — min-SSD localization of a fixed 8x8
-    pattern (the where-is-this-patch primitive next to the detectors:
-    Harris/DoG find WHAT is interesting, matching finds WHERE a known
-    patch sits).  SSD decomposes into 64 shifted-slice accumulations —
-    exact int64, map-only; the golden gathers windows with np.take and
-    re-resolves the raster-earlier argmin with a scalar loop."""
-    from .ops.payload import template_match_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return template_match_stats(sel)
-
-
 def roads_simplify_vw(spark, sf_dir):
     """VISVALINGAM-WHYATT simplification of every fixture road — the
     AREA-based generalizer next to Douglas-Peucker's distance-based
@@ -1113,7 +1070,7 @@ def roads_simplify_vw(spark, sf_dir):
     twin, so one flipped keep decision fails the hash."""
     import numpy as np
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
 
     def _vw(batches):
         from sdg_engine.geom import vw_keep_mask
@@ -1193,25 +1150,6 @@ def doc_collocation_tscore(spark, sf_dir):
         .filter(F.col("rnk") <= 10)
         .select("rnk", "x", "y", "f_xy", "t_micros")
     )
-
-
-def image_palette_mediancut(spark, sf_dir):
-    """MEDIAN-CUT PALETTE EXTRACTION — the dominant-color primitive of
-    image curation (and the classic GIF/PNG8 quantizer), fully
-    deterministic: split the box with the most pixels (tie: earliest
-    created), along its widest channel (tie order R,G,B), at the
-    median pixel of the channel-sorted distinct colors (lower half
-    inclusive), to 8 boxes; palette entry = componentwise floor mean.
-    All integer; error = SSD of each pixel to ITS box's mean.  Golden:
-    the same SPEC over scalar python dicts (vs the engine's sorted
-    numpy distinct-color arrays)."""
-    from .ops.payload import palette_mediancut_stats
-
-    images, _roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
-    sel = images.filter(
-        (F.col("image_id") < "img000000000500") & (F.col("fmt") != "jpg")
-    )
-    return palette_mediancut_stats(sel)
 
 
 # ---------------------------------------------------------------------------

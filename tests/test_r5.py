@@ -331,7 +331,7 @@ def test_simplified_pyramid_coarser_zoom_fewer_vertices(spark, sf_dir):
     from sdg_engine.queries_r5 import PYR_SIMPLIFY_EPS, _simplified_segments
     from sdg_engine.queries_ext import _fixture_images
 
-    _images, roads = _fixture_images(spark, sf_dir, pin_sf=0.01)
+    _images, roads = _fixture_images(spark)
     counts = {
         z: _simplified_segments(roads, eps).count()
         for z, eps in PYR_SIMPLIFY_EPS.items()

@@ -56,3 +56,36 @@ def test_query_modules_share_one_graph_module():
             if hasattr(mod, helper):
                 assert getattr(mod, helper) is getattr(graph, helper), (
                     mod.__name__, helper)
+
+
+def test_golden_image_selection_is_written_once():
+    """The golden image bound appears in exactly one query module."""
+    import inspect
+
+    holders = [mod.__name__ for mod in _query_modules()
+               if "img000000000500" in inspect.getsource(mod)]
+    assert holders == ["sdg_engine.queries_image"]
+
+
+def test_query_modules_share_one_image_stats_table():
+    """Every image_* stats builder a wave module exposes is queries_image's."""
+    from sdg_engine import queries_image
+
+    assert len(queries_image.IMAGE_STATS) == 36
+    for mod in _query_modules():
+        for name in queries_image.IMAGE_STATS:
+            if hasattr(mod, name):
+                assert getattr(mod, name) is getattr(queries_image, name), (
+                    mod.__name__, name)
+                assert getattr(mod, name).__name__ == name
+
+
+def test_one_decode_scaffold_for_per_image_stats():
+    """The per-image stats kernels share one decode loop: the scaffold's
+    ``decode_image(bytes(rr.bytes)`` is the only one under ops/."""
+    import pathlib
+
+    ops = pathlib.Path(sdg_engine.__file__).parent / "ops"
+    hits = sum(p.read_text().count("decode_image(bytes(rr.bytes)")
+               for p in ops.glob("*.py"))
+    assert hits == 1
